@@ -116,11 +116,39 @@ object SnapshotDelta {
     * semantics are preserved bit-for-bit). Bucketed snapshots should
     * keep [[updated]]: their join has NO exchange to factor out, and
     * the extra semi-joins would only add work.
+    *
+    * The changed-key set stays persisted after the call, because the
+    * returned plan reads it; a later call on the same snapshots replaces
+    * it. A caller that consumes the result in one place should use
+    * [[withUpdatedNarrow]], which releases it.
     */
   def updatedNarrow(newest: DataFrame, previous: DataFrame, key: String,
                     attrs: Seq[String],
                     mode: ChangeMode = Legacy,
-                    maxChangedKeys: Long = -1L): DataFrame = {
+                    maxChangedKeys: Long = -1L): DataFrame =
+    steered(newest, previous, key, attrs, mode, maxChangedKeys)._1
+
+  /** [[updatedNarrow]] for one use: `use` consumes the result (writes
+    * it), then the persisted changed-key set is released, whether `use`
+    * returns or throws. A pipeline that runs week after week in one
+    * session would otherwise keep one cached set per run.
+    */
+  def withUpdatedNarrow[A](newest: DataFrame, previous: DataFrame,
+                           key: String, attrs: Seq[String],
+                           mode: ChangeMode = Legacy,
+                           maxChangedKeys: Long = -1L)(
+      use: DataFrame => A): A = {
+    val (df, changed) =
+      steered(newest, previous, key, attrs, mode, maxChangedKeys)
+    try use(df) finally changed.foreach(_.unpersist(blocking = false))
+  }
+
+  /** [[updatedNarrow]]'s plan, with the persisted changed-key set it
+    * reads (None once the guard has routed to [[updated]]).
+    */
+  private def steered(newest: DataFrame, previous: DataFrame, key: String,
+                      attrs: Seq[String], mode: ChangeMode,
+                      maxChangedKeys: Long): (DataFrame, Option[DataFrame]) = {
     val rowHash = "_graft_rowhash"
     val h = xxhash64(
       struct(attrs.flatMap(c => Seq(col(c).isNull, col(c))): _*))
@@ -135,11 +163,17 @@ object SnapshotDelta {
     // localCheckpoint) keeps the lineage: an executor lost mid-query on
     // a long-running cluster recomputes the lost blocks instead of
     // failing the job (checkpointed blocks are NOT fault-tolerant).
+    // A set an earlier call on the same snapshots left cached (callers
+    // that hand the result on lazily cannot release it) would be reused
+    // as is, though the snapshot files may have been rewritten since:
+    // drop it first, so every call steers on the current data and
+    // repeated calls hold at most one set per snapshot pair.
     val changed = n.select(col(s"n.$key").as("ck"), col(rowHash).as("nh"))
       .join(p.select(col(s"p.$key").as("ck"), col(rowHash).as("ph")), "ck")
       .where(col("nh") =!= col("ph"))
       .select(col("ck")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    changed.unpersist(blocking = true)
+    changed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // RUNTIME GUARD on the broadcast contract: the phase-2 semi build
     // side is hinted broadcast, which is only sane while the CHANGED
     // key set is change-rate sized. At a pathological change rate
@@ -161,7 +195,7 @@ object SnapshotDelta {
       }
     if (changed.count() > budget) {
       changed.unpersist(blocking = false) // routed away: drop the cache
-      return updated(newest, previous, key, attrs, mode)
+      return (updated(newest, previous, key, attrs, mode), None)
     }
     // phase 2: shrink each wide side to the changed keys, then run the
     // exact pair-level logic of `updated` on what remains. The semi
@@ -178,9 +212,10 @@ object SnapshotDelta {
     val p2 = p.join(broadcast(changed), col(s"p.$key") === col("ck"),
       "left_semi")
     val pre = col(s"n.$rowHash") =!= col(s"p.$rowHash")
-    n2.join(p2, col(s"n.$key") === col(s"p.$key"), "inner")
+    (n2.join(p2, col(s"n.$key") === col(s"p.$key"), "inner")
       .where(pre && changePredicate(attrs, "n", "p", mode))
-      .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*)
+      .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*),
+     Some(changed))
   }
 
   /** Rows whose key appears only in the newest snapshot — the documented

@@ -61,6 +61,24 @@ object Pipeline {
         */
       runId: Option[String] = None)
 
+  /** `s` as a JSON string literal (RFC 8259 §7): quote, backslash and
+    * every control character U+0000–U+001F escaped, so a message keeps
+    * the run log at one JSON object per line.
+    */
+  private[pipeline] def jsonString(s: String): String = {
+    val b = new StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"'  => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+
   def tableName(dataset: String): String = s"abr_weekly_${dataset.toLowerCase}"
 
   /** Check the kill-switch flag: a file named `disabled` under the lake
@@ -122,8 +140,7 @@ object Pipeline {
       val dir = java.nio.file.Paths.get(cfg.lakeRoot, "LOGS")
       java.nio.file.Files.createDirectories(dir)
       val lines = log.events.zipWithIndex.map { case (m, i) =>
-        val esc = m.replace("\\", "\\\\").replace("\"", "\\\"")
-        s"""{"seq":$i,"run":"$id","message":"$esc"}"""
+        s"""{"seq":$i,"run":${jsonString(id)},"message":${jsonString(m)}}"""
       }
       java.nio.file.Files.writeString(
         dir.resolve(s"$id.jsonl"), lines.mkString("\n"))
@@ -163,13 +180,15 @@ object AgencyDeltaStage {
 
     log("Running Delta Query (Change)")
     // narrow-shuffle formulation: unbucketed snapshots, so the changed
-    // keys steer the wide join instead of shuffling 34 columns per side
-    val updated = SnapshotDelta.updatedNarrow(
-      n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey))
-    val updPath = SingleFileCsv.write(
-      updated,
-      s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
-      s"${dataset}_updated.csv")
+    // keys steer the wide join instead of shuffling 34 columns per side;
+    // the steering set is released once UPDATED is written
+    val updPath = SnapshotDelta.withUpdatedNarrow(
+        n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey)) {
+      updated => SingleFileCsv.write(
+        updated,
+        s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
+        s"${dataset}_updated.csv")
+    }
     log(s"Delta written: $updPath")
 
     log("Running Delta Query (New)")

@@ -15,8 +15,12 @@ import graft.sources.SingleFileCsv
   * `log.Fatal`s exactly here).
   *
   * Returns the written file's path (query id = random UUID, like
-  * Athena's execution id; [[graft.sources.SingleFileCsv]] gives the
-  * single-file output that the rename stage then stabilizes).
+  * Athena's execution id). [[graft.sources.SingleFileCsv]] writes it:
+  * the SQL runs as one execution at its natural parallelism, each task
+  * formats its rows with Spark's CSV generator, and the driver writes
+  * them into the file — no write job, no commit protocol — so a small
+  * interactive result costs its query. A large result streams through
+  * hidden part files instead of driver memory.
   */
 object QueryApi {
 

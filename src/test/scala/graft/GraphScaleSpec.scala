@@ -145,4 +145,15 @@ class GraphScaleSpec extends SparkSpec {
       "PQ encode must not regroup the corpus (per-row expression only)")
     assert(df.count() > 0)
   }
+
+  test("sql_recursive_bfs: repeated executions give the same distances " +
+       "and leave no trade_sym_* temp view in the session") {
+    val q = graft.queries.RelationalQueries.queries("sql_recursive_bfs")
+    def symViews: Seq[String] = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("trade_sym")).toSeq
+    val before = symViews
+    val runs = (1 to 3).map(_ => q(spark, sfDir).collect().toSet)
+    assert(runs.distinct.size == 1 && runs.head.nonEmpty)
+    assert(symViews == before && before.isEmpty, s"views left: $symViews")
+  }
 }

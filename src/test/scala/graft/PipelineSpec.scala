@@ -87,6 +87,53 @@ class PipelineSpec extends SparkSpec {
     dropAgencyTable()
   }
 
+  test("re-running a week in one session succeeds with identical delta " +
+       "outputs and leaves no persisted RDD behind") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    def stage(): Unit = {
+      write(staging, "VIC240108_ABR_Agency_Data.txt",
+        Seq(row("p1"), row("p2"), row("p3")))
+      write(staging, "VIC240115_ABR_Agency_Data.txt",
+        Seq(row("p1"), row("p2", Map("org_nm" -> "CHANGED")), row("p4")))
+    }
+    val outputs = Seq("UPDATED", "ADDED").map(k => lake.resolve(
+      s"DELTA/$k/Agency_Data/importdate=2024-01-15/Agency_Data_${k.toLowerCase}.csv"))
+    val cfg = Pipeline.Config(staging.toString, lake.toString)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val runs = (1 to 2).map { _ =>
+      stage()
+      Pipeline.run(spark, cfg)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+      outputs.map(p => Files.readAllLines(p).asScala.toSeq)
+    }
+    assert(runs(0) == runs(1))
+    assert(runs(0)(0).tail.map(_.takeWhile(_ != ',')) == Seq("p2"))
+    assert(runs(0)(1).tail.map(_.takeWhile(_ != ',')) == Seq("p4"))
+    dropAgencyTable()
+  }
+
+  test("the persisted run log escapes control characters: every line " +
+       "parses as JSON and messages round-trip") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    write(staging, "VIC240115_ABR_Agency_Data.txt", Seq(row("p1")))
+    val tricky = "a\nb\t\"c\"\\ \u0000\u001f\u007f é"
+    val cfg = Pipeline.Config(staging.toString, lake.toString,
+      runId = Some("ctl"),
+      hooks = Map("Agency_Data" -> Seq((_, _, _, log) => log(tricky))))
+    val log = new Pipeline.RunLog()
+    Pipeline.run(spark, cfg, log)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = Files.readAllLines(lake.resolve("LOGS/ctl.jsonl")).asScala
+    assert(lines.size == log.events.size)
+    val parsed = lines.map(l => mapper.readTree(l))
+    assert(parsed.map(_.get("message").asText()) == log.events)
+    assert(parsed.map(_.get("seq").asInt()) == log.events.indices)
+    assert(log.events.contains(tricky))
+    dropAgencyTable()
+  }
+
   test("two datasets in one run: Businessname flows through the same " +
        "staging -> classify -> lake -> table path via Config.schemas, " +
        "with its own (pluggable) hook and no delta") {

@@ -253,4 +253,42 @@ class SnapshotDeltaSpec extends SparkSpec {
       assert(upd > 0, s"updated at ${dates(i + 1)} should be non-empty")
     }
   }
+
+  test("updatedNarrow steers on the current files: a snapshot rewritten " +
+       "between two calls in one session changes the result, and the " +
+       "persisted changed-key set is replaced, not added") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-narrow")
+    // replace a snapshot's only file by one under a new name, as a
+    // re-ingest of the same week does
+    def put(name: String, rows: String*): Unit = {
+      val d = Files.createDirectories(dir.resolve(name))
+      d.toFile.listFiles.foreach(_.delete())
+      Files.writeString(d.resolve(s"part-${System.nanoTime}.csv"),
+        rows.mkString("", "\n", "\n"))
+    }
+    def load(name: String): DataFrame = spark.read
+      .schema("pid string, a string, b string")
+      .csv(dir.resolve(name).toString)
+    def run(): Seq[String] = SnapshotDelta.updatedNarrow(
+        load("newest"), load("prev"), "pid", Seq("a", "b"))
+      .collect().map(_.getString(0)).toSeq.sorted
+    put("prev", "p1,x,1", "p2,x,1", "p3,x,1")
+    put("newest", "p1,x,1", "p2,y,1", "p3,x,1")
+    assert(run() == Seq("p2"))
+    val held = spark.sparkContext.getPersistentRDDs.size
+    put("newest", "p1,x,1", "p2,x,1", "p3,z,1")
+    assert(run() == Seq("p3"))
+    assert(spark.sparkContext.getPersistentRDDs.size == held)
+  }
+
+  test("a narrow DeltaQueries delta repeated in one session returns the " +
+       "same rows and holds one changed-key set, not one per execution") {
+    val q = graft.queries.DeltaQueries.queries("delta_updated")
+    val first = q(spark, sfDir).collect().toSet
+    assert(first.nonEmpty)
+    val held = spark.sparkContext.getPersistentRDDs.size
+    for (_ <- 1 to 3) assert(q(spark, sfDir).collect().toSet == first)
+    assert(spark.sparkContext.getPersistentRDDs.size == held)
+  }
 }
