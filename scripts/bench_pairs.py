@@ -16,11 +16,14 @@ compare uncommitted work, stage it and pass `--change $(git stash create)`.
 Prints, for every end-to-end metric in the change's BENCHMARK.json, the
 median and quartiles of each side, the relative change of the medians,
 how many pairs the change won (a pair is won when the change's value is
-better in the metric's direction; ties count for neither side), and
-whether a gain may be claimed: at least nine tenths of the pairs won and
-the medians further apart than the base's interquartile range. Also
-prints each side's failed operation counts. Exits non-zero if a run
-fails.
+better in the metric's direction; ties count for neither side), whether
+a gain may be claimed (at least nine tenths of the pairs won and the
+medians further apart than the base's interquartile range), and the
+no-regression gate against the metric's `bound`: `regressed` when the
+change's median is worse than the base's by more than the bound,
+`unresolved` when the base's IQR/median exceeds the bound (the runs
+spread too widely to tell), `ok` otherwise. Also prints each side's
+failed operation counts. Exits non-zero if a run fails.
 """
 import argparse
 import json
@@ -82,8 +85,8 @@ def main():
             if not os.path.isdir(trees[side]):
                 export(rev, trees[side])
         with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
-            better = {m["name"]: m["better"]
-                      for m in json.load(f)["end_to_end"]}
+            metrics = {m["name"]: (m["better"], m["bound"])
+                       for m in json.load(f)["end_to_end"]}
         results = {"base": [], "change": []}
         for i, seed in enumerate(seeds(a.seeds)):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
@@ -100,8 +103,8 @@ def main():
     n = len(results["base"])
     print(f"{a.workload}: {n} pairs, base {a.base}, change {a.change}")
     print(f"{'metric':28} {'base q1/med/q3':>30} {'change q1/med/q3':>30}"
-          f" {'d_med':>8} {'wins':>6} gain")
-    for name, direction in better.items():
+          f" {'d_med':>8} {'wins':>6} gain gate")
+    for name, (direction, bound) in metrics.items():
         b = [r["metrics"][name]["value"] for r in results["base"]]
         c = [r["metrics"][name]["value"] for r in results["change"]]
         bq, cq = quartiles(b), quartiles(c)
@@ -109,9 +112,12 @@ def main():
         wins = sum(1 for x, y in zip(b, c) if sign * (y - x) > 0)
         rel = (cq[1] - bq[1]) / bq[1] if bq[1] else 0.0
         gain = wins >= 0.9 * n and abs(cq[1] - bq[1]) > bq[2] - bq[0]
+        spread = (bq[2] - bq[0]) / bq[1] if bq[1] else 0.0
+        gate = [label for label, hit in (("regressed", -sign * rel > bound),
+                                         ("unresolved", spread > bound)) if hit]
         print(f"{name:28} {'%.4g / %.4g / %.4g' % bq:>30} "
               f"{'%.4g / %.4g / %.4g' % cq:>30} {rel:+8.1%} {wins:>3}/{n}"
-              f" {'yes' if gain else 'no'}")
+              f" {'yes ' if gain else 'no  '} {','.join(gate) or 'ok'}")
     for side in ("base", "change"):
         failed = [r["failed"] for r in results[side]]
         print(f"{side} failed per run: {failed}")

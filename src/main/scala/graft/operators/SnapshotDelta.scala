@@ -60,38 +60,42 @@ object SnapshotDelta {
     }.reduce(_ || _)
   }
 
+  /** Per-row xxhash64 over the compared attrs — the unchanged-row fast
+    * path of [[updated]] and the narrow join of [[updatedNarrow]]. Each
+    * column is hashed as an (IS NULL, value) pair: Spark's hash fold
+    * SKIPS null fields (the running hash passes through), so without
+    * the marker, rows differing only in which column holds a NULL —
+    * ("x", NULL) vs (NULL, "x") — would collide and the change would
+    * be missed; the never-null marker makes every column advance the
+    * fold, leaving only the generic ~2^-64 collision risk.
+    */
+  private def rowHash(attrs: Seq[String]): Column =
+    xxhash64(struct(attrs.flatMap(c => Seq(col(c).isNull, col(c))): _*))
+
   /** Rows present in both snapshots (matched on `key`) where any attribute in
     * `attrs` differs; result carries the newest-side columns, like the
     * reference SELECT list (agency-delta.go:127-160).
     */
   def updated(newest: DataFrame, previous: DataFrame, key: String,
               attrs: Seq[String], mode: ChangeMode = Legacy): DataFrame = {
-    // Unchanged-row fast path (both modes): a per-row xxhash64 over the
-    // compared attrs, computed ONCE per input row during the scan (not
-    // per joined pair), dismisses the dominant unchanged rows with a
-    // single long compare — the wide 33-way disjunction then runs only
-    // on hash-differing pairs, where it both confirms the change exactly
-    // (no false positives from the hash) and keeps the predicate the
-    // source of truth. The dismissal is mode-agnostic: hash-equal rows
-    // are attribute-identical, and an identical pair satisfies neither
-    // `a <=> b` negated (NullSafe) nor any `a != b` (Legacy — `x != x`
-    // is false, `NULL != NULL` is NULL; either way the row is filtered),
-    // so Legacy's exact three-valued parity with agency-delta.go:168-200
-    // is preserved on every pair the predicate actually sees. Each
-    // column is hashed as an (IS NULL, value) pair: Spark's hash fold
-    // SKIPS null fields (the running hash passes through), so without
-    // the marker, rows differing only in which column holds a NULL —
-    // ("x", NULL) vs (NULL, "x") — would collide and the change would
-    // be missed; the never-null marker makes every column advance the
-    // fold, leaving only the generic ~2^-64 collision risk.
-    val rowHash = "_graft_rowhash"
-    val h = xxhash64(
-      struct(attrs.flatMap(c => Seq(col(c).isNull, col(c))): _*))
-    val pre = col(s"n.$rowHash") =!= col(s"p.$rowHash")
-    val n = newest.withColumn(rowHash, h).alias("n")
-    val p = previous.withColumn(rowHash, h).alias("p")
+    // Unchanged-row fast path (both modes): the row hash, computed ONCE
+    // per input row during the scan (not per joined pair), dismisses the
+    // dominant unchanged rows with a single long compare — the wide
+    // 33-way disjunction then runs only on hash-differing pairs, where
+    // it both confirms the change exactly (no false positives from the
+    // hash) and keeps the predicate the source of truth. The dismissal
+    // is mode-agnostic: hash-equal rows are attribute-identical, and an
+    // identical pair satisfies neither `a <=> b` negated (NullSafe) nor
+    // any `a != b` (Legacy — `x != x` is false, `NULL != NULL` is NULL;
+    // either way the row is filtered), so Legacy's exact three-valued
+    // parity with agency-delta.go:168-200 is preserved on every pair
+    // the predicate actually sees.
+    val h = rowHash(attrs)
+    val n = newest.withColumn("_graft_rowhash", h).alias("n")
+    val p = previous.withColumn("_graft_rowhash", h).alias("p")
     n.join(p, col(s"n.$key") === col(s"p.$key"), "inner")
-      .where(pre && changePredicate(attrs, "n", "p", mode))
+      .where(col("n._graft_rowhash") =!= col("p._graft_rowhash") &&
+        changePredicate(attrs, "n", "p", mode))
       .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*)
   }
 
@@ -102,120 +106,55 @@ object SnapshotDelta {
     * ~1.1 GB of sort spill — the measured 73 s sort/spill cliff in
     * SCALING.md sweep H); this one joins only `(key, rowhash)` first —
     * a few dozen bytes per row — to find the CHANGED key set, then
-    * semi-joins each wide side down to exactly those keys before the
-    * full-width join runs. Weekly change rates are single-digit
-    * percent, so the wide join's inputs shrink by ~20-100× and AQE
-    * turns its exchange into a broadcast when the changed set fits;
-    * even in the worst case (everything changed) the plan degrades to
-    * the plain formulation's cost, never below it. Each side is
-    * scanned twice, but a parquet scan is sequential map-side work —
-    * trading it for the full-width exchange+sort is the right exchange
-    * at any scale. Result rows are IDENTICAL to [[updated]] (the pair
-    * filter and change predicate re-run on the rejoined pairs, so
-    * multiplicity under duplicate keys and Legacy's three-valued
-    * semantics are preserved bit-for-bit). Bucketed snapshots should
-    * keep [[updated]]: their join has NO exchange to factor out, and
-    * the extra semi-joins would only add work.
+    * semi-joins each wide side down to exactly those keys before
+    * [[updated]] runs on what remains. Weekly change rates are
+    * single-digit percent, so the wide join's inputs shrink by ~20-100×
+    * and AQE turns its exchange into a broadcast when the changed set
+    * fits. Each side is scanned twice, but a parquet scan is sequential
+    * map-side work — trading it for the full-width exchange+sort is the
+    * right exchange at any scale. Result rows and column order are
+    * IDENTICAL to [[updated]] (the pair filter and change predicate
+    * re-run on the rejoined pairs, so multiplicity under duplicate keys
+    * and Legacy's three-valued semantics are preserved bit-for-bit).
+    * Bucketed snapshots should keep [[updated]]: their join has NO
+    * exchange to factor out, and the extra semi-joins would only add
+    * work.
     *
-    * The changed-key set stays persisted after the call, because the
-    * returned plan reads it; a later call on the same snapshots replaces
-    * it. A caller that consumes the result in one place should use
-    * [[withUpdatedNarrow]], which releases it.
+    * The changed keys are collected to the driver when this is called
+    * — at most `budget + 1` of them, the budget being the session's
+    * `autoBroadcastJoinThreshold` at a conservative 64 bytes/key — and
+    * the returned plan carries them as a local relation, so nothing is
+    * cached and nothing needs releasing. Past the budget (bulk re-key,
+    * full refresh: the set grows with the table, and broadcasting it
+    * would OOM the driver) this returns [[updated]]'s plain wide join,
+    * which is exactly the right plan when most rows changed (the
+    * semi-joins would filter nothing).
     */
   def updatedNarrow(newest: DataFrame, previous: DataFrame, key: String,
                     attrs: Seq[String],
-                    mode: ChangeMode = Legacy,
-                    maxChangedKeys: Long = -1L): DataFrame =
-    steered(newest, previous, key, attrs, mode, maxChangedKeys)._1
-
-  /** [[updatedNarrow]] for one use: `use` consumes the result (writes
-    * it), then the persisted changed-key set is released, whether `use`
-    * returns or throws. A pipeline that runs week after week in one
-    * session would otherwise keep one cached set per run.
-    */
-  def withUpdatedNarrow[A](newest: DataFrame, previous: DataFrame,
-                           key: String, attrs: Seq[String],
-                           mode: ChangeMode = Legacy,
-                           maxChangedKeys: Long = -1L)(
-      use: DataFrame => A): A = {
-    val (df, changed) =
-      steered(newest, previous, key, attrs, mode, maxChangedKeys)
-    try use(df) finally changed.foreach(_.unpersist(blocking = false))
-  }
-
-  /** [[updatedNarrow]]'s plan, with the persisted changed-key set it
-    * reads (None once the guard has routed to [[updated]]).
-    */
-  private def steered(newest: DataFrame, previous: DataFrame, key: String,
-                      attrs: Seq[String], mode: ChangeMode,
-                      maxChangedKeys: Long): (DataFrame, Option[DataFrame]) = {
-    val rowHash = "_graft_rowhash"
-    val h = xxhash64(
-      struct(attrs.flatMap(c => Seq(col(c).isNull, col(c))): _*))
-    val n = newest.withColumn(rowHash, h).alias("n")
-    val p = previous.withColumn(rowHash, h).alias("p")
-    // phase 1: the narrow join — key + 8-byte hash per side, nothing
-    // else crosses the wire; distinct because a key with several
-    // differing pairs must appear once in the steering set. Eagerly
-    // materialized (persist + the guard's count below): the set steers
-    // the plan choice AND seeds both semi-joins, so computing it once
-    // beats three lazy recomputations of the narrow join. persist (not
-    // localCheckpoint) keeps the lineage: an executor lost mid-query on
-    // a long-running cluster recomputes the lost blocks instead of
-    // failing the job (checkpointed blocks are NOT fault-tolerant).
-    // A set an earlier call on the same snapshots left cached (callers
-    // that hand the result on lazily cannot release it) would be reused
-    // as is, though the snapshot files may have been rewritten since:
-    // drop it first, so every call steers on the current data and
-    // repeated calls hold at most one set per snapshot pair.
-    val changed = n.select(col(s"n.$key").as("ck"), col(rowHash).as("nh"))
-      .join(p.select(col(s"p.$key").as("ck"), col(rowHash).as("ph")), "ck")
+                    mode: ChangeMode = Legacy): DataFrame = {
+    // the narrow join — key + 8-byte hash per side, nothing else
+    // crosses the wire; distinct because a key with several differing
+    // pairs must appear once in the steering list
+    val h = rowHash(attrs)
+    val changed = newest.select(col(key).as("ck"), h.as("nh"))
+      .join(previous.select(col(key).as("ck"), h.as("ph")), "ck")
       .where(col("nh") =!= col("ph"))
       .select(col("ck")).distinct()
-    changed.unpersist(blocking = true)
-    changed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // RUNTIME GUARD on the broadcast contract: the phase-2 semi build
-    // side is hinted broadcast, which is only sane while the CHANGED
-    // key set is change-rate sized. At a pathological change rate
-    // (bulk re-key, full refresh) the set grows with the table and a
-    // hinted broadcast would OOM the driver — so the materialized set
-    // is counted (free: it is already checkpointed) and past the
-    // budget the operator routes to [[updated]]'s plain wide join,
-    // which is exactly the right plan when most rows changed (the
-    // semi-joins would filter nothing). The count doubles as the
-    // persist's materialization, so the guard costs no extra job.
-    // Budget default: the session's autoBroadcastJoinThreshold at a
-    // conservative 64 bytes/key.
-    val budget =
-      if (maxChangedKeys >= 0L) maxChangedKeys
-      else {
-        val t = newest.sparkSession.sessionState.conf
-          .autoBroadcastJoinThreshold
-        if (t <= 0) 160000L else math.max(1L, t / 64L)
-      }
-    if (changed.count() > budget) {
-      changed.unpersist(blocking = false) // routed away: drop the cache
-      return (updated(newest, previous, key, attrs, mode), None)
-    }
-    // phase 2: shrink each wide side to the changed keys, then run the
-    // exact pair-level logic of `updated` on what remains. The semi
-    // build side is HINTED broadcast: size estimation cannot see that
-    // the distinct-after-join output is change-rate sized (join size
-    // estimates multiply), so the unhinted initial plan is a SMJ semi
-    // whose ENSURE_REQUIREMENTS exchange materializes a full-width
-    // shuffle WRITE of each side even after AQE converts the join and
-    // reads it locally. The hint keeps the wide sides exchange-free
-    // end-to-end (one broadcast, reused for both sides); the guard
-    // above has already proven the build side fits.
-    val n2 = n.join(broadcast(changed), col(s"n.$key") === col("ck"),
-      "left_semi")
-    val p2 = p.join(broadcast(changed), col(s"p.$key") === col("ck"),
-      "left_semi")
-    val pre = col(s"n.$rowHash") =!= col(s"p.$rowHash")
-    (n2.join(p2, col(s"n.$key") === col(s"p.$key"), "inner")
-      .where(pre && changePredicate(attrs, "n", "p", mode))
-      .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*),
-     Some(changed))
+    val t = newest.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val budget = if (t <= 0) 160000L else math.max(1L, t / 64L)
+    val keys = changed.limit(math.min(budget + 1, Int.MaxValue).toInt)
+      .collect()
+    if (keys.length > budget) return updated(newest, previous, key, attrs, mode)
+    // the semi build side is HINTED broadcast: size estimation cannot
+    // see that the semi-joined sides are change-rate sized, so an
+    // unhinted plan may shuffle each wide side in full; the hint keeps
+    // them exchange-free (the budget above has proven the list fits)
+    val steer = broadcast(newest.sparkSession.createDataFrame(
+      java.util.Arrays.asList(keys: _*), changed.schema))
+    def semi(df: DataFrame): DataFrame =
+      df.join(steer, df(key) === steer("ck"), "left_semi")
+    updated(semi(newest), semi(previous), key, attrs, mode)
   }
 
   /** Rows whose key appears only in the newest snapshot — the documented

@@ -49,12 +49,6 @@ object Pipeline {
       /** dataset → post-load hooks (reference O3: load.go:55-56). */
       hooks: Map[String, Seq[(SparkSession, Config, String, RunLog) => Unit]] =
         Map("Agency_Data" -> Seq(AgencyDeltaStage.run)),
-      /** reserved transform slot (reference O7: transform.go — declared,
-        * empty).
-        */
-      transform: Option[(SparkSession, Config, RunLog) => Unit] = None,
-      /** delete staging files after successful load (reference S10). */
-      cleanup: Boolean = true,
       /** run id naming the persisted log stream (reference O5 names its
         * CloudWatch stream per run, abr-etl.go:43-50); None disables
         * persistence.
@@ -118,21 +112,19 @@ object Pipeline {
     val loaded = LakeIngest.ingest(
       spark, cfg.stagingDir, cfg.lakeRoot, cfg.schemas, cfg.delimiter)
     loaded.foreach(i => log(s"Loaded ${i.file} -> ${i.dataset}/importdate=${i.importdate}"))
-    cfg.transform.foreach(_(spark, cfg, log))
     loaded.map(_.dataset).distinct.foreach { ds =>
       cfg.hooks.getOrElse(ds, Nil).foreach(_(spark, cfg, ds, log))
     }
-    if (cfg.cleanup) {
-      loaded.foreach { i =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(cfg.stagingDir, i.file))
-      }
-      // the reference's CleanUp also unlinks the downloaded archive
-      // (abr-etl.go:52-57)
-      cfg.zipFile.foreach(z =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(z)))
-      log(s"Cleaned up ${loaded.size} staging files")
+    // delete staging files after a successful load (reference S10); the
+    // reference's CleanUp also unlinks the downloaded archive
+    // (abr-etl.go:52-57)
+    loaded.foreach { i =>
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(cfg.stagingDir, i.file))
     }
+    cfg.zipFile.foreach(z =>
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(z)))
+    log(s"Cleaned up ${loaded.size} staging files")
     log("ABR ETL Process complete")
     // O5: persist the structured event stream, one JSON object per line,
     // under LOGS/<runId>.jsonl (the CloudWatch-stream analog)
@@ -180,15 +172,12 @@ object AgencyDeltaStage {
 
     log("Running Delta Query (Change)")
     // narrow-shuffle formulation: unbucketed snapshots, so the changed
-    // keys steer the wide join instead of shuffling 34 columns per side;
-    // the steering set is released once UPDATED is written
-    val updPath = SnapshotDelta.withUpdatedNarrow(
-        n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey)) {
-      updated => SingleFileCsv.write(
-        updated,
-        s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
-        s"${dataset}_updated.csv")
-    }
+    // keys steer the wide join instead of shuffling 34 columns per side
+    val updPath = SingleFileCsv.write(
+      SnapshotDelta.updatedNarrow(
+        n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey)),
+      s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
+      s"${dataset}_updated.csv")
     log(s"Delta written: $updPath")
 
     log("Running Delta Query (New)")

@@ -53,12 +53,19 @@ class SnapshotDeltaSpec extends SparkSpec {
 
   test("updatedNarrow matches updated bit-for-bit on the NULL matrix " +
        "in both modes (the narrow-shuffle plan is a pure rewrite)") {
-    Seq(Legacy, NullSafe).foreach { mode =>
-      val plain = SnapshotDelta.updated(newer, prev, "pid",
-        Seq("a", "b"), mode).collect().toSet
-      val narrow = SnapshotDelta.updatedNarrow(newer, prev, "pid",
-        Seq("a", "b"), mode).collect().toSet
-      assert(narrow == plain, s"mode $mode diverged")
+    // key first, and key last: rows compare by position, so the narrow
+    // plan must keep the input's column order as updated does
+    def keyLast(df: DataFrame) = df.select("a", "b", "pid")
+    for {
+      (n, p) <- Seq((newer, prev), (keyLast(newer), keyLast(prev)))
+      mode <- Seq(Legacy, NullSafe)
+    } {
+      val plain = SnapshotDelta.updated(n, p, "pid", Seq("a", "b"), mode)
+      val narrow = SnapshotDelta.updatedNarrow(n, p, "pid",
+        Seq("a", "b"), mode)
+      assert(narrow.columns.toSeq == plain.columns.toSeq)
+      assert(narrow.collect().toSet == plain.collect().toSet,
+        s"mode $mode diverged on columns ${n.columns.mkString(",")}")
     }
   }
 
@@ -77,12 +84,37 @@ class SnapshotDeltaSpec extends SparkSpec {
     }
   }
 
+  /** All nodes of a physical plan, through AQE and its query stages. */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec        => Seq(q.plan)
+      case other                    => other.children
+    }
+    p +: kids.flatMap(allNodes)
+  }
+
+  /** `body` with `autoBroadcastJoinThreshold` set to `bytes`, so that
+    * updatedNarrow's changed-key budget is `bytes / 64`.
+    */
+  private def withBroadcastThreshold[A](bytes: Long)(body: => A): A = {
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(k)
+    spark.conf.set(k, bytes.toString)
+    try body finally saved match {
+      case Some(v) => spark.conf.set(k, v)
+      case None    => spark.conf.unset(k)
+    }
+  }
+
   test("updatedNarrow plan pin: no shuffle exchange ever carries the " +
        "wide columns — only (key, hash) projections cross the wire; the " +
        "wide sides reach the final join semi-joined and AQE-broadcast") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
     // a genuinely wide shape: 20 compared columns
     val cols = (1 to 20).map(i => s"c$i")
     def wide(seed: Int): DataFrame = {
@@ -92,44 +124,54 @@ class SnapshotDeltaSpec extends SparkSpec {
           cols.map(c => concat(lit(c), $"id" % lit(seed)).as(c)): _*)
       base
     }
-    val df = SnapshotDelta.updatedNarrow(wide(7), wide(11), "pid", cols)
-    df.collect() // materialize so AQE finalizes the plan
-    def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec        => Seq(q.plan)
-        // descend into the persisted steering set's cached plan so its
-        // exchanges are width-checked too (they carry only (ck,hash))
-        case im: org.apache.spark.sql.execution.columnar
-            .InMemoryTableScanExec => Seq(im.relation.cachedPlan)
-        case other                    => other.children
-      }
-      p +: kids.flatMap(allNodes)
+    // every execution the call and its result run: the steering list's
+    // collect as well as the final query
+    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(qe)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
+        seen.put(qe)
     }
-    val widths = allNodes(df.queryExecution.executedPlan)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    spark.listenerManager.register(listener)
+    val (df, executions) = try {
+      val df = SnapshotDelta.updatedNarrow(wide(7), wide(11), "pid", cols)
+      df.collect() // materialize so AQE finalizes the plan
+      // listener events arrive in order: once the marker is seen, every
+      // execution before it has been reported
+      spark.range(1).toDF("marker").collect()
+      (df, Iterator.continually(
+          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(qe => qe != null &&
+          !qe.analyzed.output.exists(_.name == "marker"))
+        .toSeq)
+    } finally spark.listenerManager.unregister(listener)
+    assert(executions.size >= 2,
+      s"expected the steering collect and the final query, saw ${executions.size}")
+    val widths = executions.flatMap(qe => allNodes(qe.executedPlan))
       .collect { case s: ShuffleExchangeLike => s.child.output.length }
-    // the steering set is an eagerly-materialized persisted set now
-    // (its own narrow job carries the (key, hash) shuffles), so the
-    // final plan may be entirely exchange-free — the pin is that NO
-    // exchange, anywhere incl. inside the cached steering plan, ever
-    // carries the wide columns
+    // the pin: NO exchange, in the steering collect or in the final
+    // plan, ever carries the wide columns
     assert(widths.forall(_ <= 3),
       s"a wide row crossed a shuffle: exchange widths $widths " +
         "(narrow plan must only ever shuffle key+hash)")
-    // and the steering set genuinely arrived pre-materialized: the
-    // plan reads the persisted set (recomputable lineage — survives
-    // executor loss, unlike a localCheckpoint) instead of re-deriving
-    // the narrow join inline
-    assert(df.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan"),
-      "expected the persisted changed-key set in the final plan")
+    // the steering list reaches the final plan as driver-held rows,
+    // broadcast to the semi-joins, and nothing is left cached
+    val finalNodes = allNodes(df.queryExecution.executedPlan)
+    assert(finalNodes.exists {
+        case b: BroadcastExchangeLike =>
+          allNodes(b.child).exists(_.isInstanceOf[LocalTableScanExec])
+        case _ => false
+      }, "expected the changed keys as a broadcast LocalTableScan")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
   }
 
   test("updatedNarrow runtime guard: a most-keys-change snapshot pair " +
        "past the broadcast budget routes to the plain wide join (one " +
        "join node, no steering set), bit-parity preserved") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions._
     // EVERY key changes — the pathological rate the broadcast contract
@@ -138,30 +180,27 @@ class SnapshotDeltaSpec extends SparkSpec {
       concat(lit("k"), $"id").as("pid"), lit("old").as("a"), lit("1").as("b"))
     val n = spark.range(0, 300).select(
       concat(lit("k"), $"id").as("pid"), lit("new").as("a"), lit("1").as("b"))
-    val guarded = SnapshotDelta.updatedNarrow(n, p, "pid", Seq("a", "b"),
-      Legacy, maxChangedKeys = 10L)
     val plain = SnapshotDelta.updated(n, p, "pid", Seq("a", "b"), Legacy)
-    assert(guarded.collect().toSet == plain.collect().toSet)
-    def allNodes(pl: SparkPlan): Seq[SparkPlan] = {
-      val kids = pl match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec        => Seq(q.plan)
-        case other                    => other.children
+      .collect().toSet
+    // at the edge: 300 changed keys are one past a budget of 299 keys,
+    // and exactly a budget of 300, which still takes the narrow plan
+    // (two semis feeding the final pair join = 3 joins)
+    for ((budget, narrow) <- Seq(299L -> false, 300L -> true))
+      withBroadcastThreshold(budget * 64) {
+        val df = SnapshotDelta.updatedNarrow(n, p, "pid", Seq("a", "b"),
+          Legacy)
+        assert(df.collect().toSet == plain)
+        val semis = df.queryExecution.analyzed.exists {
+          case j: Join => j.joinType == LeftSemi
+          case _       => false
+        }
+        assert(semis == narrow, s"300 changed keys vs budget $budget")
+        val joins = allNodes(df.queryExecution.executedPlan)
+          .count(_.isInstanceOf[BaseJoinExec])
+        if (narrow) assert(joins >= 3, s"narrow path expected, saw $joins joins")
+        else assert(joins == 1,
+          s"guard must route to updated's single wide join, saw $joins joins")
       }
-      pl +: kids.flatMap(allNodes)
-    }
-    val joins = allNodes(guarded.queryExecution.executedPlan)
-      .count(_.isInstanceOf[BaseJoinExec])
-    assert(joins == 1,
-      s"guard must route to updated's single wide join, saw $joins joins")
-    // and under the budget the narrow plan still engages (3 joins:
-    // steering + two semis feeding the final pair join = 4 total)
-    val narrow = SnapshotDelta.updatedNarrow(n, p, "pid", Seq("a", "b"),
-      Legacy, maxChangedKeys = 1000000L)
-    assert(narrow.collect().toSet == plain.collect().toSet)
-    val narrowJoins = allNodes(narrow.queryExecution.executedPlan)
-      .count(_.isInstanceOf[BaseJoinExec])
-    assert(narrowJoins >= 3, s"narrow path expected, saw $narrowJoins joins")
   }
 
   test("added = keys new in newest (anti-join intent, Readme.md:13)") {
