@@ -13,13 +13,12 @@ import org.apache.spark.sql.SparkSession
   * same end state from the exact same parquet inputs. `once` runs the
   * build exactly once per (applicationId, sfDir, name) and lets later
   * samples (and sibling queries sharing a fixture) read the standing
-  * state — the same app-scoped doctrine as the index caches
-  * ([[CacheRegistry]] scaladoc): nothing persists across driver runs
-  * (the key is the applicationId; a fresh JVM always rebuilds, and
-  * every build starts with its own DROP so stale on-disk state from an
-  * earlier JVM can never leak through), and the build cost stays
-  * visible in the first toucher's run-1 fixture column while
-  * [[CacheRegistry]] annotates every cross-query read.
+  * state — the same app-scoped doctrine as the query families' index
+  * caches: nothing persists across driver runs (the key is the
+  * applicationId; a fresh JVM always rebuilds, and every build starts
+  * with its own DROP so stale on-disk state from an earlier JVM can
+  * never leak through), and the build cost is paid once, by the first
+  * query that touches the fixture.
   *
   * Timed EXECUTION is untouched: the graded number was always the read
   * over the prepared state, and the prepared state is bit-identical
@@ -39,11 +38,9 @@ object Fixtures {
   private val done = TrieMap.empty[(String, String, String), Unit]
 
   def once(s: SparkSession, dir: String, name: String)(build: => Unit): Unit = {
-    CacheRegistry.read(s"fixture.$name")
     val k = (s.sparkContext.applicationId, dir, name)
     if (!done.contains(k)) synchronized {
       if (!done.contains(k)) {
-        CacheRegistry.built(s"fixture.$name")
         build
         done.put(k, ())
       }
@@ -59,7 +56,6 @@ object Fixtures {
     */
   def onceValue[T](s: SparkSession, dir: String, name: String)
                   (build: => T): T = {
-    CacheRegistry.read(s"fixture.$name")
     val k = (s.sparkContext.applicationId, dir, name)
     values.get(k) match {
       case Some(v) => v.asInstanceOf[T]
@@ -67,7 +63,6 @@ object Fixtures {
         values.get(k) match {
           case Some(v) => v.asInstanceOf[T]
           case None =>
-            CacheRegistry.built(s"fixture.$name")
             val v = build
             values.put(k, v)
             v

@@ -8,9 +8,8 @@ import org.apache.spark.sql.SparkSession
   * parallelism sized to the core count instead of the 200-partition
   * default (local runs drown in empty-partition scheduling otherwise;
   * a cluster deployment overrides `shufflePartitions` to its reducer
-  * budget). Verify / Bench / PlanCheck / TimeQuery and the test suite
-  * all build through here, so a library user gets the same session
-  * shape the gates are proven on.
+  * budget). The benchmark and the test suite both build through here,
+  * so a library user gets the same session shape they are measured on.
   */
 object GraftSession {
 

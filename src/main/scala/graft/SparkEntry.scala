@@ -24,14 +24,11 @@ object SparkEntry {
     DeltaQueries.queries ++
     LakeQueries.queries ++
     RelationalQueries.queries ++
-    TpchQueries.queries ++
     IngestQueries.queries ++
     DedupQueries.queries ++
     CurationQueries.queries ++
     SimilarityQueries.queries ++
-    TextQueries.queries ++
-    MultimodalQueries.queries ++
-    TemporalQueries.queries
+    TextQueries.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -40,12 +37,9 @@ object SparkEntry {
     DeltaQueries.oracleSql ++
     LakeQueries.oracleSql ++
     RelationalQueries.oracleSql ++
-    TpchQueries.oracleSql ++
     IngestQueries.oracleSql ++
     DedupQueries.oracleSql ++
     CurationQueries.oracleSql ++
     SimilarityQueries.oracleSql ++
-    TextQueries.oracleSql ++
-    MultimodalQueries.oracleSql ++
-    TemporalQueries.oracleSql
+    TextQueries.oracleSql
 }

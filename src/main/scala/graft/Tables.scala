@@ -20,8 +20,8 @@ object Tables {
   /** Conf the session carries so a TIMESTAMP(NANOS)-encoded events file is
     * readable at all (Spark's parquet reader rejects the footer otherwise).
     * Harmless when the generator writes TIMESTAMP(MICROS) — sessions set it
-    * unconditionally at CONSTRUCTION (Verify / Bench / the test builder all
-    * do), not per-read: it is not a datasource option, and mutating session
+    * unconditionally at CONSTRUCTION ([[GraftSession]] and the test
+    * builder both do), not per-read: it is not a datasource option, and mutating session
     * conf inside a reader is racy under concurrent reads.
     */
   val nanosConf: (String, String) =
@@ -120,8 +120,8 @@ object Tables {
 
   /** Footer-schema drift guard: assert every table under `sfDir` still
     * matches [[expectedSchemas]], failing loud with the table AND column
-    * named. Cheap (footers only — no data read) and run once at Verify /
-    * Bench session start, so a regenerated lake that flips a physical type
+    * named. Cheap (footers only — no data read) and meant to run once at
+    * session start, so a regenerated lake that flips a physical type
     * outside the accepted families fails the round's first second, not as
     * a 0-row result three queries deep (r8 lesson).
     */

@@ -95,10 +95,8 @@ object DedupQueries {
 
   /** (shingles, signature) of the plain `documents` corpus. */
   private def baseMinhash(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.CacheRegistry.read("dedup.base_minhash")
     baseMinhashCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir), {
-        graft.CacheRegistry.built("dedup.base_minhash")
         val sh = TextDedup
           .shingles(docs(s, dir).select("doc_id", "text"), "doc_id", "text")
           .persist()
@@ -122,10 +120,8 @@ object DedupQueries {
     .empty[(String, String), DataFrame]
 
   private def simhashSigs(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("dedup.simhash_signatures")
     simhashSigCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir), {
-        graft.CacheRegistry.built("dedup.simhash_signatures")
         TextDedup.simhash16(
           TextDedup.shingles(corpusNear(s, dir), "doc_id", "text",
             dedup = false))
@@ -229,10 +225,8 @@ object DedupQueries {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("dedup.verified_pairs")
     verifiedPairsCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir), {
-        graft.CacheRegistry.built("dedup.verified_pairs")
         val d = docs(s, dir).select("doc_id", "text")
         val nearCopies = d.filter(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 1000000000).as("doc_id"),
@@ -257,10 +251,8 @@ object DedupQueries {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   private def histClusters(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("dedup.hist_clusters")
     histClustersCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("dedup.hist_clusters")
       graft.operators.GraphOps.connectedComponents(
           verifiedPairs(s, dir).where(col("id2") < 1000000000L)
             .select("id1", "id2"))

@@ -872,43 +872,6 @@ object DeltaQueries {
          |FROM n FULL OUTER JOIN p
          |  ON n.importdate = p.importdate AND n.o_orderkey = p.o_orderkey
          |GROUP BY 1""".stripMargin,
-    // lives here (not TemporalQueries) because it reuses the history
-    // snapshot CTE: the foreachBatch fold keeps, per key, the row from
-    // the max importdate whose snapshot contains the key
-    "stream_foreachbatch_upsert" ->
-      s"""$historySnapshotSql
-         |SELECT importdate, count(*) AS n_keys FROM (
-         |  SELECT o_orderkey, max(importdate) AS importdate
-         |  FROM snaps GROUP BY 1) q
-         |GROUP BY 1""".stripMargin,
-    // mergeability makes the stream's batch-folded cells identical to
-    // this one-shot batch build over all snapshots
-    "stream_cms_merge" -> {
-      def bSql(d: Int, item: String) =
-        s"CAST('0x' || substr(md5('cms$d|' || $item), 1, 8) AS BIGINT) % 64"
-      s"""$historySnapshotSql,
-         |wi AS (SELECT CAST(o_orderkey % 100 AS VARCHAR) AS item FROM snaps),
-         |cells AS (
-         |  SELECT 0 AS d, ${bSql(0, "item")} AS b, count(*) AS c FROM wi GROUP BY 2
-         |  UNION ALL
-         |  SELECT 1, ${bSql(1, "item")}, count(*) FROM wi GROUP BY 2
-         |  UNION ALL
-         |  SELECT 2, ${bSql(2, "item")}, count(*) FROM wi GROUP BY 2
-         |), items AS (
-         |  SELECT CAST(range AS VARCHAR) AS item, range AS item_id
-         |  FROM range(100)
-         |), probes AS (
-         |  SELECT item_id, 0 AS d, ${bSql(0, "item")} AS b FROM items
-         |  UNION ALL
-         |  SELECT item_id, 1, ${bSql(1, "item")} FROM items
-         |  UNION ALL
-         |  SELECT item_id, 2, ${bSql(2, "item")} FROM items
-         |)
-         |SELECT p.item_id AS item,
-         |  CAST(min(COALESCE(c.c, 0)) AS BIGINT) AS est
-         |FROM probes p LEFT JOIN cells c ON c.d = p.d AND c.b = p.b
-         |GROUP BY 1""".stripMargin
-    },
     "delta_history_dpp" -> {
       val dateList = AgencyLake.historyDates.map(d => s"'$d'").mkString(",")
       s"""$historySnapshotSql

@@ -103,9 +103,7 @@ object RelationalQueries {
   private val bfsViewSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   private def tradeEdgesWeighted(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("graph.trade_edges")
     tradeEdgeCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("graph.trade_edges")
       tradeEdgesWeightedDerive(s, dir).localCheckpoint()
     })
   }
@@ -149,10 +147,8 @@ object RelationalQueries {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   private def custSuppEdges(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("graph.cust_supp_edges")
     custSuppEdgeCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("graph.cust_supp_edges")
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
@@ -177,10 +173,8 @@ object RelationalQueries {
   private def preparedPagerank(s: SparkSession, dir: String,
                                broadcastRanks: Boolean)
       : graft.operators.GraphOps.PreparedPagerank = {
-    graft.CacheRegistry.read(s"graph.prepared_pagerank_$broadcastRanks")
     preparedPagerankCache.getOrElseUpdate(
       (s.sparkContext.applicationId, dir, broadcastRanks), {
-      graft.CacheRegistry.built(s"graph.prepared_pagerank_$broadcastRanks")
       graft.operators.GraphOps.preparePagerank(custSuppEdges(s, dir),
         edgesDistinct = true,
         rankBroadcastMaxNodes = if (broadcastRanks) 10L * 1000 * 1000 else 0L)
@@ -989,8 +983,8 @@ object RelationalQueries {
       // The staged tradeEdges frame is bound to the session that BUILT
       // it, and a temp view registers in its DataFrame's session — so
       // the view registration and the recursive SQL must both run on
-      // that owning session, or an isolated caller (Bench's fresh
-      // newSession per sample) registers the view where its own
+      // that owning session, or an isolated caller (a fresh
+      // newSession per run) registers the view where its own
       // s.sql() cannot see it.
       val edges = tradeEdges(s, dir)
       val owner = edges.sparkSession

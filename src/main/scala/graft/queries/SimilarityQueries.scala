@@ -165,9 +165,7 @@ object SimilarityQueries {
 
   private def historyIvfIndex(s: SparkSession, dir: String)
       : (Array[(Long, Seq[Double])], DataFrame) = {
-    graft.CacheRegistry.read("similarity.history_ivf_index")
     ivfIndexCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("similarity.history_ivf_index")
       val hist = base(s, dir).where(col("vec_id") % 7 =!= 0)
       val cents = hist
         .withColumn("ch",
@@ -204,9 +202,7 @@ object SimilarityQueries {
 
   private def residualPqIndex(s: SparkSession, dir: String)
       : (Array[(Long, Seq[Double])], Array[Seq[Double]], DataFrame) = {
-    graft.CacheRegistry.read("similarity.residual_pq_index")
     residualPqCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("similarity.residual_pq_index")
       val b = base(s, dir)
       val K = 16
       val cents = b
@@ -256,9 +252,7 @@ object SimilarityQueries {
 
   private def plainPqIndex(s: SparkSession, dir: String)
       : (Array[(Long, Seq[Double])], Seq[(Long, Seq[Double])], DataFrame) = {
-    graft.CacheRegistry.read("similarity.plain_pq_index")
     plainPqCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("similarity.plain_pq_index")
       val b = base(s, dir)
       val K = 16
       val cents = b
@@ -289,9 +283,7 @@ object SimilarityQueries {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   private def lshBucketIndex(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("similarity.lsh_bucket_index")
     lshBucketCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("similarity.lsh_bucket_index")
       base(s, dir)
         .select(col("vec_id"),
           explode(VectorSim.lshTableBuckets(col("e"))).as("tb"))
@@ -311,9 +303,7 @@ object SimilarityQueries {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   private def mipsLshIndex(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("similarity.mips_lsh_index")
     mipsIndexCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("similarity.mips_lsh_index")
       val b = base(s, dir)
       val m = b.agg(max("nrm")).collect()(0).getDouble(0)
       b.withColumn("ea", concat(col("e"),

@@ -97,9 +97,7 @@ object TextQueries {
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   private def knBigramModel(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheRegistry.read("text.kn_bigram_model")
     knModelCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("text.kn_bigram_model")
       val d = 0.75
       val bg = docs(s, dir)
         .select(split(TextDedup.normalize(col("text")), " ").as("t"))
@@ -146,9 +144,7 @@ object TextQueries {
 
   private[queries] def bm25Index(s: SparkSession,
                                  dir: String): (DataFrame, DataFrame) = {
-    graft.CacheRegistry.read("text.bm25_postings")
     bm25IndexCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      graft.CacheRegistry.built("text.bm25_postings")
       val d = docs(s, dir).select(col("doc_id"),
         split(TextDedup.normalize(col("text")), " ").as("toks"))
       val postings = d
@@ -711,10 +707,8 @@ object TextQueries {
     // scratch; matching it IS the mergeability proof (max over a token-
     // stream union = max of the parts' maxes, zero-fill aligned).
     "text_distinct_hll_incremental" -> ((s, dir) => {
-      graft.CacheRegistry.read("text.hll_registers")
       val hist = hllRegsCache.getOrElseUpdate(
         (s.sparkContext.applicationId, dir), {
-          graft.CacheRegistry.built("text.hll_registers")
           hllRegisters(docs(s, dir).select("lang", "text")).persist()
         })
       val newSnap = docs(s, dir).filter(col("doc_id") % 6 === 0)

@@ -101,9 +101,7 @@ object AgencyLake {
   def ensureWide(spark: SparkSession, sfDir: String): String = synchronized {
     val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val table = s"agency_wide_bkt$key"
-    graft.CacheRegistry.read("layout.agency_wide_bucketed")
     if (!spark.catalog.tableExists(table)) {
-      graft.CacheRegistry.built("layout.agency_wide_bucketed")
       val prev = DeltaQueries.widePrevious(spark, sfDir)
         .withColumn("importdate", lit(previousDate))
       val newer = DeltaQueries.wideNewest(spark, sfDir)

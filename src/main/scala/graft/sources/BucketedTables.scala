@@ -31,7 +31,6 @@ object BucketedTables {
     */
   def ensure(spark: SparkSession, sfDir: String): (String, String) =
     synchronized {
-      graft.CacheRegistry.read("layout.bucketed_facts")
       val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
       val root = s"${sys.props("java.io.tmpdir")}/graft-buckets-$key"
       val ordersTable = s"orders_bkt$key"
@@ -40,7 +39,6 @@ object BucketedTables {
       // reader can also trust sortBy and skip the per-query Sort (with
       // multiple files per bucket Spark must re-sort to merge them)
       if (!spark.catalog.tableExists(ordersTable)) {
-        graft.CacheRegistry.built("layout.bucketed_facts")
         Tables(spark, sfDir, "orders")
           .repartition(BucketCount, org.apache.spark.sql.functions.col("o_orderkey"))
           .write.mode("overwrite")
@@ -70,14 +68,12 @@ object BucketedTables {
     */
   def ensureSnapshots(spark: SparkSession, sfDir: String): (String, String) =
     synchronized {
-      graft.CacheRegistry.read("layout.bucketed_snapshots")
       val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
       val root = s"${sys.props("java.io.tmpdir")}/graft-buckets-$key"
       val prevTable = s"snap_prev_bkt$key"
       val newTable = s"snap_new_bkt$key"
       def write(table: String, df: org.apache.spark.sql.DataFrame): Unit =
         if (!spark.catalog.tableExists(table)) {
-          graft.CacheRegistry.built("layout.bucketed_snapshots")
           df.repartition(BucketCount,
               org.apache.spark.sql.functions.col(graft.queries.DeltaQueries.key))
             .write.mode("overwrite")
@@ -99,7 +95,6 @@ object BucketedTables {
     */
   def ensureWideSnapshots(spark: SparkSession, sfDir: String): (String, String) =
     synchronized {
-      graft.CacheRegistry.read("layout.bucketed_wide_snapshots")
       val key = sfDir.replaceAll("[^A-Za-z0-9]", "_")
       val root = s"${sys.props("java.io.tmpdir")}/graft-buckets-$key"
       val prevTable = s"snap_wide_prev_bkt$key"
@@ -107,7 +102,6 @@ object BucketedTables {
       val pid = graft.pipeline.AbrSchemas.agencyKey
       def write(table: String, df: org.apache.spark.sql.DataFrame): Unit =
         if (!spark.catalog.tableExists(table)) {
-          graft.CacheRegistry.built("layout.bucketed_wide_snapshots")
           df.repartition(BucketCount, org.apache.spark.sql.functions.col(pid))
             .write.mode("overwrite")
             .bucketBy(BucketCount, pid).sortBy(pid)

@@ -62,7 +62,8 @@ object LakeIngest {
     // one Spark job per staging file, submitted concurrently (reference
     // O2: goroutine-per-file upload, load.go:60-88 — Spark's scheduler
     // interleaves the jobs' tasks; distinct (dataset, importdate) targets
-    // never collide)
+    // never collide). Every job is waited for before the first failure
+    // (in file order) is rethrown, so no write outlives the call.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -81,7 +82,7 @@ object LakeIngest {
         Ingested(f, c.dataset, c.importdate)
       }
     }
-    jobs.map(Await.result(_, Duration.Inf))
+    jobs.map(Await.ready(_, Duration.Inf).value.get).map(_.get)
   }
 
   /** Register the dataset as a partitioned external table and recover its

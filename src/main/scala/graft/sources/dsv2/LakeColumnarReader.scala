@@ -30,7 +30,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * its columnar-to-row loop (ColumnarToRow in the plan).
   *
   * DEFAULT: ON (`-Dgraft.lake.reader.columnar=false` is the kill
-  * switch). The honest ScanBench receipt (5-col wide aggregate,
+  * switch). The honest scan benchmark receipt (5-col wide aggregate,
   * min-of-5 warm runs): 1.5 M rows — columnar 0.34–0.39 s vs row fast
   * path 0.28–0.35 s; 6 M rows — 0.45–0.52 s vs 0.44–0.45 s. PARITY,
   * not a win: this scan is dominated by page I/O + decompression +
@@ -286,7 +286,7 @@ object LakeColumnarReader {
     *
     * PROFITABILITY RECEIPT (r14, closing the r13 "bulk decoder" rung):
     * run-length null stripes + word-aligned value memcpy were gated on
-    * a measured ≥20 % win on a genuinely scan-bound shape. ScanBench
+    * a measured ≥20 % win on a genuinely scan-bound shape. The scan bench
     * at the densest shape available — 10.5 M rows COMPACTED to 16
     * files (the new compactFiles knob removes the 700-footer planning
     * noise), 5-column wide aggregate, local[16] — times columnar at

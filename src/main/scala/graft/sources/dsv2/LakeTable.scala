@@ -28,8 +28,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A file-backed DataSource V2 TABLE over a directory of parquet files —
   * the mount-an-external-store seam, with the full connector ladder
-  * exercised against REAL row groups rather than generator arithmetic
-  * (cf. [[RangeSource]], the arithmetic contract demo):
+  * exercised against REAL row groups:
   *
   *   - READ: column pruning reaches the parquet column-chunk level (the
   *     reader materializes only requested chunks), and comparison
@@ -39,7 +38,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     post-scan) so stats pruning is purely an efficiency contract,
   *     never a correctness dependency.
   *   - WRITE: `INSERT INTO` appends via stage-then-publish parquet
-  *     writers (same two-phase protocol as [[EpochSink]], batch flavor).
+  *     writers: each task stages its file, and the driver's commit
+  *     publishes every staged file in one log snapshot.
   *   - ROW-LEVEL OPS: `MERGE INTO` works via Spark's group-based
   *     copy-on-write rewrite ([[SupportsRowLevelOperations]]): Spark
   *     plans the merge join + carry-over logic, this table supplies the

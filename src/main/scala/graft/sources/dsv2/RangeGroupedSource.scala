@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The third contract of the custom-connector seam (after
-  * [[RangeSource]]'s pushdown and [[RangeStreamSource]]'s offsets):
+/** The second contract of the custom-connector seam (after
+  * [[RangeSource]]'s pushdown):
   * REPORTED PARTITIONING — the scan tells Catalyst its splits are
   * key-grouped on `grp` (`SupportsReportPartitioning` +
   * `KeyGroupedPartitioning`, each split carrying its key via

@@ -24,10 +24,9 @@ class ContractSpec extends AnyFunSuite {
     val perFamily = Seq(
       graft.queries.DeltaQueries.queries, graft.queries.LakeQueries.queries,
       graft.queries.RelationalQueries.queries,
-      graft.queries.TpchQueries.queries, graft.queries.IngestQueries.queries,
+      graft.queries.IngestQueries.queries,
       graft.queries.DedupQueries.queries, graft.queries.CurationQueries.queries,
-      graft.queries.SimilarityQueries.queries, graft.queries.TextQueries.queries,
-      graft.queries.MultimodalQueries.queries, graft.queries.TemporalQueries.queries)
+      graft.queries.SimilarityQueries.queries, graft.queries.TextQueries.queries)
     assert(perFamily.map(_.size).sum == names.size,
       "a query name is declared in two family maps — one silently shadows " +
         "the other in SparkEntry.queries")
@@ -38,8 +37,8 @@ class ContractSpec extends AnyFunSuite {
     // replacement fail loudly, because a duplicate nets the total one
     // short of what the author expects. Bump this when adding or
     // removing queries; a mismatch means a name collided.
-    assert(names.size == 290,
-      s"query count is ${names.size}, expected 290 — either bump this " +
+    assert(names.size == 229,
+      s"query count is ${names.size}, expected 229 — either bump this " +
         "pin for intentionally added/removed queries, or a duplicate " +
         "key inside a family map silently swallowed one")
   }

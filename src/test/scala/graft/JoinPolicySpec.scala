@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 /** Join-strategy policy under production-shaped thresholds: small dims
   * must broadcast (no shuffle of the fact side), fact-fact must go
   * shuffle/sort-merge (a fact broadcast would OOM an executor at real
-  * sizes). PlanCheck prints this evidence per query; these assertions
-  * pin it in CI for the two canonical shapes.
+  * sizes). These assertions pin it in CI for the two canonical
+  * shapes.
   */
 class JoinPolicySpec extends SparkSpec {
 

@@ -46,25 +46,4 @@ class LayoutInvarianceSpec extends SparkSpec {
       }
     } finally conf.set("spark.sql.shuffle.partitions", orig)
   }
-
-  test("streaming folds are identical under different micro-batch " +
-       "splits") {
-    // the cluster-scale claim behind the foreachBatch upsert and the CMS
-    // merge: the per-batch fold is associative, so HOW the input is cut
-    // into micro-batches (32 files/trigger = 2 batches vs 7 = 10) must
-    // not move the final store. A violation here is exactly the class of
-    // bug a single-split oracle run cannot see.
-    val conf = spark.conf
-    try {
-      Seq("stream_foreachbatch_upsert", "stream_cms_merge",
-          "stream_minhash_index").foreach { name =>
-        conf.set("spark.graft.stream.maxFilesPerTrigger", "32")
-        val a = rows(name)
-        conf.set("spark.graft.stream.maxFilesPerTrigger", "7")
-        val b = rows(name)
-        assert(a == b, s"$name: result moved with micro-batch split")
-        assert(a.nonEmpty)
-      }
-    } finally conf.unset("spark.graft.stream.maxFilesPerTrigger")
-  }
 }

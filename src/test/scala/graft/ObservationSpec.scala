@@ -1,7 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
+
+import graft.operators.SnapshotDelta
+import graft.pipeline.{AbrSchemas, Pipeline}
+import graft.sources.LakeIngest
 
 /** The `Observation` API as the engine's zero-cost DQ seam: metrics
   * attach to a node of an EXISTING job and are collected as the rows
@@ -15,66 +21,56 @@ class ObservationSpec extends SparkSpec {
   test("observed metrics ride the existing job: pre-filter counts are " +
        "collected with no second scan, and match an independent count") {
     val obs = Observation("ingress")
-    val orders = Tables(spark, sfDir, "orders")
-      .observe(obs,
-        count(lit(1)).as("rows_in"),
-        count(when(col("o_totalprice") <= 0, 1)).as("nonpositive_price"),
-        sum(col("o_orderkey")).as("key_sum"))
+    def frame = spark.range(0, 10000).select(
+      col("id").as("key"),
+      (col("id") % 5).as("status"),
+      (col("id") % 101 - 3).as("price"))
+    val observed = frame.observe(obs,
+      count(lit(1)).as("rows_in"),
+      count(when(col("price") <= 0, 1)).as("nonpositive_price"),
+      sum(col("key")).as("key_sum"))
     // the downstream query filters; the observation still sees ingress
-    val kept = orders.where(col("o_orderstatus") === "O").count()
+    val kept = observed.where(col("status") === 0).count()
     val m = obs.get
-    val expectedRows = Tables(spark, sfDir, "orders").count()
-    assert(m("rows_in") == expectedRows)
-    assert(m("nonpositive_price") == 0L)
-    assert(kept < expectedRows, "filter kept everything — bad fixture")
-    val expectedKeySum = Tables(spark, sfDir, "orders")
-      .agg(sum("o_orderkey")).collect()(0).getLong(0)
-    assert(m("key_sum") == expectedKeySum)
-  }
-
-  test("streaming observed metrics surface per micro-batch: ingress " +
-       "counts across the admission-controlled drain sum to the total") {
-    val q = spark.readStream
-      .format("graft.sources.dsv2.RangeStreamSource")
-      .option("end", "100000").option("batchRows", "20000")
-      .load()
-      .observe("ingress", count(lit(1)).as("rows"),
-        sum(col("v")).as("v_sum"))
-      .groupBy("tag").agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName("obs_stream_sink")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val perBatch = q.recentProgress.toSeq
-      .flatMap(p => Option(p.observedMetrics.get("ingress")))
-      .map(r => (r.getAs[Long]("rows"), r.getAs[Long]("v_sum")))
-      .filter(_._1 > 0)
-    // 5 bounded micro-batches, metrics riding each batch's existing job
-    assert(perBatch.length == 5 && perBatch.map(_._1).sum == 100000L,
-      s"per-batch ingress: $perBatch")
-    // the non-count metric survives batch splits too: per-batch v sums
-    // total the closed-form generator sum
-    val expectedVSum = (0L until 100000L)
-      .map(graft.sources.dsv2.RangeSource.vOf).sum
-    assert(perBatch.map(_._2).sum == expectedVSum)
+    assert(m("rows_in") == 10000L)
+    assert(m("nonpositive_price") == frame.where(col("price") <= 0).count())
+    assert(kept == 2000L, "the filter must drop rows — bad fixture")
+    assert(m("key_sum") == (0L until 10000L).sum)
   }
 
   test("an observation on the delta join's newest side reports the " +
        "snapshot's row count during the delta job itself") {
-    import graft.sources.AgencyLake
-    val obs = Observation("newest_side")
-    val newest = AgencyLake.snapshot(spark, sfDir, AgencyLake.newestDate)
-      .observe(obs, count(lit(1)).as("snapshot_rows"))
-    val prev = AgencyLake.snapshot(spark, sfDir, AgencyLake.previousDate)
-    val changed = newest.alias("n")
-      .join(prev.alias("p"), col(s"n.${graft.queries.DeltaQueries.key}") === col(s"p.${graft.queries.DeltaQueries.key}"))
-      .count()
-    val m = obs.get
-    assert(m("snapshot_rows") ==
-      AgencyLake.snapshot(spark, sfDir, AgencyLake.newestDate).count())
-    assert(changed > 0)
+    // a two-week lake laid out by the pipeline's own ingest: 300 keys a
+    // week, 12 of them changed in the newest week
+    val base = Files.createTempDirectory("graft-obs")
+    val staging = Files.createDirectory(base.resolve("staging"))
+    val lake = base.resolve("lake").toString
+    def week(file: String, changed: Boolean): Unit =
+      Files.writeString(staging.resolve(file), (0 until 300).map { i =>
+        val org = if (changed && i % 25 == 0) s"NEW$i" else s"ORG$i"
+        (s"p$i" +: AbrSchemas.agencyCompareAttrs.map(c =>
+          if (c == "org_nm") org else s"$c$i")).mkString("|")
+      }.mkString("\n"))
+    week("VIC240108_ABR_Agency_Data.txt", changed = false)
+    week("VIC240115_ABR_Agency_Data.txt", changed = true)
+    val cols = AbrSchemas.agencyColumns
+    LakeIngest.ingest(spark, staging.toString, lake,
+      Map("Agency_Data" -> cols))
+    val table = Pipeline.tableName("Agency_Data") + "_obs"
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    LakeIngest.registerTable(spark, table, lake, "Agency_Data", cols)
+    def snapshot(d: String) =
+      spark.table(table).where(col("importdate") === d).drop("importdate")
+    try {
+      val obs = Observation("newest_side")
+      val newest = snapshot("2024-01-15")
+        .observe(obs, count(lit(1)).as("snapshot_rows"))
+      val changed = SnapshotDelta.updated(newest, snapshot("2024-01-08"),
+        AbrSchemas.agencyKey, AbrSchemas.agencyCompareAttrs).count()
+      val m = obs.get
+      assert(m("snapshot_rows") == snapshot("2024-01-15").count())
+      assert(m("snapshot_rows") == 300L)
+      assert(changed == 12L)
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$table`")
   }
 }

@@ -1,119 +1,13 @@
 package graft
 
-import java.sql.Timestamp
-
-import graft.operators.{AsofJoin, Multimodal, TextDedup, VectorSim}
+import graft.operators.{TextDedup, VectorSim}
 import org.apache.spark.sql.functions._
 
-/** Unit coverage of the composed operators: as-of join edge cases,
-  * multimodal decode, and dedup helpers.
+/** Unit coverage of the composed operators: dedup helpers, salted
+  * joins, graph iterations and the vector-similarity kernels.
   */
 class OperatorSpec extends SparkSpec {
   import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("asofJoin picks the latest right row at-or-before each left row; " +
-       "ties resolve to the right row (inclusive <=)") {
-    val left = Seq(
-      (1L, ts("2024-01-01 10:00:00"), 100L),
-      (1L, ts("2024-01-01 12:00:00"), 101L),
-      (2L, ts("2024-01-01 09:00:00"), 200L) // no prior right row -> dropped
-    ).toDF("user_id", "lt", "left_id")
-    val right = Seq(
-      (1L, ts("2024-01-01 09:00:00"), 10L),
-      (1L, ts("2024-01-01 12:00:00"), 11L), // equal ts: counts (inclusive)
-      (2L, ts("2024-01-01 09:30:00"), 20L)
-    ).toDF("user_id", "rt", "right_id")
-    val out = AsofJoin.asofJoin(left, right, "user_id", "lt", "rt",
-        "right_id", Seq("right_id"))
-      .select("left_id", "asof_right_id").as[(Long, Long)].collect().toSet
-    assert(out == Set((100L, 10L), (101L, 11L)))
-  }
-
-  test("asofJoinForward picks the earliest right row at-or-after each " +
-       "left row; equal-time ties resolve to the MIN right id; left rows " +
-       "with no following right row are dropped") {
-    val left = Seq(
-      (1L, ts("2024-01-01 10:00:00"), 100L),
-      (1L, ts("2024-01-01 12:00:00"), 101L), // equal-ts right counts
-      (1L, ts("2024-01-01 13:00:00"), 102L), // nothing after -> dropped
-      (2L, ts("2024-01-01 09:00:00"), 200L)
-    ).toDF("user_id", "lt", "left_id")
-    val right = Seq(
-      (1L, ts("2024-01-01 11:00:00"), 10L),
-      (1L, ts("2024-01-01 12:00:00"), 11L),
-      (1L, ts("2024-01-01 12:00:00"), 12L), // tie: min id (11) wins
-      (2L, ts("2024-01-01 09:30:00"), 20L)
-    ).toDF("user_id", "rt", "right_id")
-    val out = AsofJoin.asofJoinForward(left, right, "user_id", "lt", "rt",
-        "right_id", Seq("right_id"))
-      .select("left_id", "asof_right_id").as[(Long, Long)].collect().toSet
-    assert(out == Set((100L, 10L), (101L, 11L), (200L, 20L)))
-  }
-
-  test("asofJoin equal-time right rows: the max right id wins (determinism)") {
-    val left = Seq((1L, ts("2024-01-01 10:00:00"), 100L))
-      .toDF("user_id", "lt", "left_id")
-    val right = Seq(
-      (1L, ts("2024-01-01 10:00:00"), 10L),
-      (1L, ts("2024-01-01 10:00:00"), 12L),
-      (1L, ts("2024-01-01 10:00:00"), 11L)
-    ).toDF("user_id", "rt", "right_id")
-    val out = AsofJoin.asofJoin(left, right, "user_id", "lt", "rt",
-        "right_id", Seq("right_id"))
-      .select("asof_right_id").as[Long].collect().toSeq
-    assert(out == Seq(12L))
-  }
-
-  test("asofJoin carries a matched right row even when its payload is " +
-       "NULL: no fallback to an older right row, no dropped left row") {
-    val left = Seq(
-      (1L, ts("2024-01-01 12:00:00"), 100L),
-      (2L, ts("2024-01-01 12:00:00"), 200L) // only right row has NULL note
-    ).toDF("user_id", "lt", "left_id")
-    val right = Seq(
-      (1L, ts("2024-01-01 09:00:00"), 10L, Option("old")),
-      (1L, ts("2024-01-01 11:00:00"), 11L, Option.empty[String]),
-      (2L, ts("2024-01-01 11:00:00"), 20L, Option.empty[String])
-    ).toDF("user_id", "rt", "right_id", "note")
-    val out = AsofJoin.asofJoin(left, right, "user_id", "lt", "rt",
-        "right_id", Seq("right_id", "note"))
-      .select("left_id", "asof_right_id", "asof_note")
-      .as[(Long, Long, Option[String])].collect().toSet
-    assert(out == Set((100L, 11L, None), (200L, 20L, None)))
-  }
-
-  test("multimodal decode extracts header fields and full length; " +
-       "batch size smaller than the partition exercises batching") {
-    val media = Seq(
-      (1L, "image", Array[Byte](10, 20, 4, 9), 1000L),
-      (2L, "image", Array[Byte](-1, 0, 3, 9), 7L) // -1 -> unsigned 255
-    ).toDF("doc_id", "kind", "payload", "full_len")
-    val metas = Multimodal.decode(media, batchSize = 1)
-      .collect().sortBy(_.doc_id)
-    assert(metas(0) == Multimodal.MediaMeta(1L, 1000L, 10L, 20L, "rgb"))
-    assert(metas(1) == Multimodal.MediaMeta(2L, 7L, 255L, 0L, "gray"))
-  }
-
-  test("multimodal decode/sampleFrames survive short payloads: sentinel " +
-       "meta and zero frames instead of a task-killing exception") {
-    val media = Seq(
-      (1L, "image", Array[Byte](10, 20, 4, 9), 1000L),
-      (2L, "image", Array.empty[Byte], 5000L),      // empty upload
-      (3L, "image", Array[Byte](7), 5000L)          // truncated header
-    ).toDF("doc_id", "kind", "payload", "full_len")
-    val metas = Multimodal.decode(media).collect().sortBy(_.doc_id)
-    assert(metas(0).mode == "rgb")
-    assert(metas(1) == Multimodal.MediaMeta(2L, 5000L, 0L, 0L, "invalid"))
-    assert(metas(2) == Multimodal.MediaMeta(3L, 5000L, 0L, 0L, "invalid"))
-    val frames = Multimodal.sampleFrames(media)
-    // empty payload -> no frames; 1-byte payload still has its header
-    // byte, so frame sampling proceeds (5 frames, every 7th -> 1)
-    assert(frames.filter(col("doc_id") === 2L).count() == 0)
-    assert(frames.filter(col("doc_id") === 3L).count() == 1)
-    assert(frames.filter(col("doc_id") === 1L).count() == 1)
-  }
 
   test("candidatePairs bucket-size cap drops a degenerate band bucket " +
        "(candidate count stays bounded, informative buckets survive)") {

@@ -1,15 +1,22 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-import graft.pipeline.{AbrSchemas, Pipeline}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+
+import graft.pipeline.{AbrSchemas, AgencyDeltaStage, Pipeline}
+import graft.sources.LakeIngest
 
 /** End-to-end pipeline test (SURVEY §5.4): a staging dir of synthetic
   * `VIC<yymmdd>_ABR_Agency_Data.txt` files → full run → assert lake
   * layout, single-file delta CSV names + contents, hook execution,
-  * cleanup; plus the kill-switch abort path and the not-enough-partitions
-  * log-and-continue path.
+  * cleanup, the delta's partition pruning; plus the kill-switch abort
+  * path, the not-enough-partitions log-and-continue path and a failed
+  * ingest that leaves no job running.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -30,6 +37,11 @@ class PipelineSpec extends SparkSpec {
 
   private def write(dir: Path, name: String, rows: Seq[String]): Unit =
     Files.writeString(dir.resolve(name), rows.mkString("\n"))
+
+  /** Businessname's columns: the reference has no DDL for the other
+    * datasets in the repository, so any caller-supplied list serves.
+    */
+  private val bnCols = Seq("pid", "abn", "bus_nm", "bus_stat", "bus_val")
 
   private def dropAgencyTable(): Unit =
     spark.sql(s"DROP TABLE IF EXISTS ${Pipeline.tableName("Agency_Data")}")
@@ -140,7 +152,6 @@ class PipelineSpec extends SparkSpec {
     dropAgencyTable()
     val (staging, lake) = freshDirs()
     write(staging, "VIC240115_ABR_Agency_Data.txt", Seq(row("p1")))
-    val bnCols = graft.queries.IngestQueries.businessnameCols
     write(staging, "VIC240115_ABR_Businessname.txt",
       Seq("b1|111|ACME PTY LTD|R|10.00", "b2|222|WIDGETS CO|C|20.50"))
 
@@ -168,7 +179,7 @@ class PipelineSpec extends SparkSpec {
     // MSCK-registered table reads the rows back with the placeholder schema
     val table = "abr_weekly_businessname_spec"
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    graft.sources.LakeIngest.registerTable(
+    LakeIngest.registerTable(
       spark, table, lake.toString, "Businessname", bnCols)
     val back = spark.table(table)
       .orderBy("pid").collect()
@@ -248,6 +259,80 @@ class PipelineSpec extends SparkSpec {
     assert(log.events.contains("Not enough partitions to run delta"))
     assert(!Files.exists(lake.resolve("DELTA")))
     assert(log.events.contains("ABR ETL Process complete"))
+    dropAgencyTable()
+  }
+
+  test("the delta stage reads each snapshot from its own importdate " +
+       "partition only") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    write(staging, "VIC240101_ABR_Agency_Data.txt", Seq(row("p1"), row("p2")))
+    write(staging, "VIC240108_ABR_Agency_Data.txt",
+      Seq(row("p1"), row("p2"), row("p3")))
+    write(staging, "VIC240115_ABR_Agency_Data.txt",
+      Seq(row("p1"), row("p2", Map("org_nm" -> "CHANGED")), row("p4")))
+    var executions = Seq.empty[QueryExecution]
+    val delta: (SparkSession, Pipeline.Config, String, Pipeline.RunLog) => Unit =
+      (s, c, ds, log) =>
+        executions = executionsOf(AgencyDeltaStage.run(s, c, ds, log))._2
+    Pipeline.run(spark, Pipeline.Config(staging.toString, lake.toString,
+      hooks = Map("Agency_Data" -> Seq(delta))))
+    assert(Files.exists(lake.resolve(
+      "DELTA/UPDATED/Agency_Data/importdate=2024-01-15/Agency_Data_updated.csv")))
+    // updated: the steering collect and the final query scan both
+    // snapshots; added scans both once more
+    val ss = executions.flatMap(qe => allNodes(qe.executedPlan))
+      .collect { case s: FileSourceScanExec => s }
+    assert(ss.size >= 6, s"expected every delta scan, saw ${ss.size}")
+    ss.foreach { scan =>
+      val pf = scan.metadata.getOrElse("PartitionFilters", "")
+      assert(pf.contains("importdate"),
+        s"expected an importdate partition filter, got: $pf")
+      val selected = scan.metrics.get("numPartitions").map(_.value)
+      assert(selected.contains(1L),
+        s"each side must list exactly its own partition, got $selected")
+    }
+    dropAgencyTable()
+  }
+
+  test("a failed file fails the run only after every other ingest job " +
+       "has finished") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    write(staging, "VIC240115_ABR_Agency_Data.txt", Seq(row("p1")))
+    // enough rows that Businessname's job outlasts Agency_Data's failure
+    val bnRows = 200000
+    write(staging, "VIC240115_ABR_Businessname.txt",
+      (0 until bnRows).map(i => s"b$i|$i|NAME $i|R|$i.00"))
+    // a regular file where Agency_Data's lake directory should be
+    Files.createDirectories(lake.resolve("DATA"))
+    Files.writeString(lake.resolve("DATA/Agency_Data"), "not a directory")
+    val starts = new ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val returned = try {
+      intercept[Exception](Pipeline.run(spark, Pipeline.Config(
+        staging.toString, lake.toString,
+        schemas = Map(
+          "Agency_Data" -> AbrSchemas.agencyColumns,
+          "Businessname" -> bnCols))))
+      val t = System.currentTimeMillis()
+      val bnPart = lake.resolve("DATA/Businessname/importdate=2024-01-15")
+      assert(Files.exists(bnPart.resolve("_SUCCESS")),
+        "the other dataset's partition must be complete when run throws")
+      // give a straggler job time to be submitted and reported
+      Thread.sleep(2000)
+      t
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!starts.isEmpty, "the Businessname job must have run")
+    assert(starts.asScala.forall(_ <= returned),
+      "a job started after Pipeline.run had thrown")
+    val back = spark.read.schema(LakeIngest.stringSchema(bnCols))
+      .option("sep", "|")
+      .csv(lake.resolve("DATA/Businessname/importdate=2024-01-15").toString)
+    assert(back.count() == bnRows)
     dropAgencyTable()
   }
 }

@@ -150,25 +150,6 @@ class Round6QueriesSpec extends SparkSpec {
     assert(trueHeavy.subsetOf(out.map(_._1).toSet))
   }
 
-  test("resample: the grid is dense (hours x types), counts account for " +
-       "every event, and carry-forward is non-null after first sighting") {
-    val out = graft.queries.TemporalQueries.queries("events_resample")(
-        spark, sfDir)
-      .as[(String, java.sql.Timestamp, Long, Option[Double])].collect()
-    val types = out.map(_._1).distinct.length
-    val hours = out.map(_._2).distinct.length
-    assert(out.length == types * hours)
-    assert(out.map(_._3).sum == Tables(spark, sfDir, "events").count())
-    // per type: NULL fill only before the first observed hour
-    out.groupBy(_._1).foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_._2.getTime)
-      val firstObs = sorted.indexWhere(_._3 > 0)
-      assert(firstObs >= 0)
-      assert(sorted.drop(firstObs).forall(_._4.isDefined))
-      assert(sorted.take(firstObs).forall(_._4.isEmpty))
-    }
-  }
-
   test("snapshot drift: histograms account for every row of both " +
        "snapshots and the injected price shift registers as drift") {
     val out = graft.queries.DeltaQueries.queries("dq_snapshot_drift")(
@@ -263,33 +244,6 @@ class Round6QueriesSpec extends SparkSpec {
     // containment proxy: every core member's final degree cannot exceed
     // the number of other survivors
     assert(out.forall(_._2 <= out.length - 1))
-  }
-
-  test("changepoint: the scaled cusum telescopes to zero over the full " +
-       "series, so the reported day is a genuine interior extremum") {
-    val out = graft.queries.TemporalQueries.queries("events_changepoint")(
-        spark, sfDir)
-      .as[(String, String, Long)].collect()
-    assert(out.length == 5) // one per event type
-    assert(out.forall(_._3 != 0L), "an all-flat series has no changepoint")
-    // independent driver-side recomputation of the argmax
-    val daily = Tables(spark, sfDir, "events")
-      .select(col("event_type"), to_date(col("ts")).as("day"))
-      .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      .as[(String, java.sql.Date, Long)].collect()
-    out.foreach { case (et, cpDay, cusum) =>
-      val series = daily.filter(_._1 == et).sortBy(_._2.toString)
-      val total = series.map(_._3).sum
-      val ndays = series.length
-      var acc = 0L
-      val cusums = series.map { case (_, d, c) =>
-        acc += c * ndays - total; (d.toString, acc) }
-      assert(cusums.last._2 == 0L, "cusum must telescope to zero")
-      val bestByRule = cusums
-        .sortBy(t => (-math.abs(t._2), t._1)).head
-      assert((bestByRule._1, bestByRule._2) == ((cpDay, cusum)),
-        s"$et: expected $bestByRule, got ${(cpDay, cusum)}")
-    }
   }
 
   test("hll: every language's estimate is finite, positive, and within " +

@@ -103,44 +103,6 @@ class Round7QueriesSpec extends SparkSpec {
     }
   }
 
-  test("as-of join property: the union+carry-forward operator equals " +
-       "a per-row linear-scan reference on random event streams") {
-    import graft.operators.AsofJoin
-    // reference: for each left row, scan all right rows with the same
-    // key and time <= left time; pick max time, ties to MAX right id —
-    // the documented contract, implemented the naive O(n·m) way
-    def reference(left: Seq[(Long, Long, Long)],
-                  right: Seq[(Long, Long, Long)]): Set[(Long, Long)] =
-      left.flatMap { case (k, lt, lid) =>
-        val matches = right.filter { case (rk, rt, _) => rk == k && rt <= lt }
-        if (matches.isEmpty) None
-        else {
-          val best = matches.maxBy { case (_, rt, rid) => (rt, rid) }
-          Some((lid, best._3))
-        }
-      }.toSet
-    val rnd = new scala.util.Random(23)
-    (1 to 3).foreach { trial =>
-      // small key/time ranges force heavy collisions, including exact
-      // time ties on both sides
-      val left = (1L to 60L).map(i =>
-        (rnd.nextInt(5).toLong, rnd.nextInt(20).toLong, i))
-      val right = (1001L to 1040L).map(i =>
-        (rnd.nextInt(5).toLong, rnd.nextInt(20).toLong, i))
-      val expected = reference(left, right)
-      val got = AsofJoin.asofJoin(
-          left.toDF("k", "lt", "lid"),
-          right.toDF("k", "rt", "rid"),
-          key = "k", leftTime = "lt", rightTime = "rt",
-          rightId = "rid", carried = Seq("rid"))
-        .select(col("lid"), col("asof_rid"))
-        .as[(Long, Long)].collect().toSet
-      assert(got == expected,
-        s"trial $trial: only-spark=${(got -- expected).take(5)}, " +
-          s"only-ref=${(expected -- got).take(5)}")
-    }
-  }
-
   test("LSH banding property: candidatePairs equals a reference " +
        "implementation on random corpora (pins the one-sided cap)") {
     import graft.operators.TextDedup
@@ -288,23 +250,6 @@ class Round7QueriesSpec extends SparkSpec {
     assert(banded == brute,
       s"pigeonhole missed ${(brute -- banded).take(5)} / " +
         s"invented ${(banded -- brute).take(5)}")
-  }
-
-  test("pixel dedup catches BMP re-encodes that digest dedup misses: " +
-       "every group is exactly one PNG + its transcode (2 items, 2 " +
-       "digests), one group per injected re-encode") {
-    val out = graft.queries.MultimodalQueries.queries("mm_dedup_phash")(
-        spark, sfDir)
-      .as[(Long, Long, Long)].collect() // n_items, n_digests, min_doc
-    assert(out.nonEmpty)
-    val nReenc = Tables(spark, sfDir, "documents")
-      .where(col("doc_id") % 18 === 0).count()
-    // the id-byte pixels make false groups impossible and the real
-    // decode makes missed transcodes impossible — exact, no slack
-    assert(out.length.toLong == nReenc,
-      s"${out.length} pixel groups for $nReenc transcodes")
-    assert(out.forall(g => g._1 == 2L && g._2 == 2L),
-      s"every group must be a (PNG, BMP) pair: ${out.take(5).toSeq}")
   }
 
   test("incremental HLL merge: history registers come from the " +

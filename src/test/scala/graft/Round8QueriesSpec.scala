@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
 import org.apache.spark.sql.functions._
 
 /** Invariants of the round-8 queries beyond the oracle's hash-compare:
@@ -15,15 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class Round8QueriesSpec extends SparkSpec {
   import spark.implicits._
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val expanded = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
-    p +: expanded.flatMap(allNodes)
-  }
 
   test("sim_index_incremental: history vectors are never re-scanned — " +
        "one parquet scan (the new delivery), history rides in as the " +

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -18,15 +16,6 @@ import org.apache.spark.sql.functions._
   *     fixed-size worst-k contract.
   */
 class Round9QueriesSpec extends SparkSpec {
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val expanded = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
-    p +: expanded.flatMap(allNodes)
-  }
 
   test("cur_decon_semantic: every injected leak pair is flagged at cos ~ 1, " +
        "nothing else reaches the threshold on the random fixture") {

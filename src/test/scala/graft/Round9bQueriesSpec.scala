@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -15,15 +13,6 @@ import org.apache.spark.sql.functions._
   *     reader — format breadth must not cost the pruning contracts.
   */
 class Round9bQueriesSpec extends SparkSpec {
-
-  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
-    val expanded = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
-    p +: expanded.flatMap(allNodes)
-  }
 
   test("graph_shortest_path equals a driver-side 4-hop Bellman-Ford on the " +
        "same weighted edges, distances exactly") {

@@ -194,61 +194,6 @@ class Round9cQueriesSpec extends SparkSpec {
     assert(plan.contains("GraftRangeGrouped"), plan)
   }
 
-  test("the DSv2 stream source drains under admission control — " +
-       "batchRows-bounded micro-batches, exactly ceil(end/batchRows) of " +
-       "them — and AvailableNow then terminates") {
-    val q = spark.readStream
-      .format("graft.sources.dsv2.RangeStreamSource")
-      .option("end", "100000")
-      .option("batchRows", "20000")
-      .option("slices", "8")
-      .load()
-      .groupBy("tag").agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName("dsv2_admission_sink")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.filter(_.numInputRows > 0)
-    assert(dataBatches.length == 5,
-      s"expected 5 data micro-batches (100000/20000), got " +
-        s"${dataBatches.map(_.numInputRows).mkString(",")}")
-    // the read limit is a hard per-batch cap, and the drain is complete
-    assert(dataBatches.forall(_.numInputRows <= 20000))
-    assert(dataBatches.map(_.numInputRows).sum == 100000L)
-  }
-
-  test("the DSv2 stream source restarts from the checkpointed offset: a " +
-       "second run over a grown range emits only the delta — no " +
-       "duplicate, no gap") {
-    val root = Files.createTempDirectory("dsv2-restart")
-    val ckpt = root.resolve("ckpt").toString
-    val out = root.resolve("out").toString
-    def drain(end: Long): Unit = {
-      val q = spark.readStream
-        .format("graft.sources.dsv2.RangeStreamSource")
-        .option("end", end.toString)
-        .option("batchRows", "300")
-        .load()
-        .select("id")
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", ckpt)
-        .option("path", out)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drain(1000)   // first run: [0, 1000) in 300-row batches
-    drain(2000)   // restart against the SAME checkpoint: only [1000, 2000)
-    val ids = spark.read.parquet(out).collect().map(_.getLong(0))
-    assert(ids.length == 2000, s"dup or gap: ${ids.length} rows")
-    assert(ids.toSet == (0L until 2000L).toSet)
-  }
-
   test("events_variant typed extraction agrees row-for-row with the " +
        "get_json_object string path") {
     val viaVariant = Tables(spark, sfDir, "events")

@@ -11,7 +11,7 @@ import graft.SparkEntry
   * invisible in row-equality checks but dominates cost at 100 TB —
   * reading 6 columns of a 34-column lake is ~6x less IO, and a pushed
   * filter skips entire row groups via statistics. These assertions pin
-  * the properties PlanCheck prints, in CI.
+  * those properties in CI.
   */
 class ScanPruningSpec extends SparkSpec {
 
@@ -56,14 +56,6 @@ class ScanPruningSpec extends SparkSpec {
       assert(scan.requiredSchema.fieldNames.toSet ==
         Set("o_orderkey", "o_orderstatus", "o_totalprice"))
     }
-    // resample: each consumer scan reads only its slice of the 6-column
-    // events table (bounds: ts alone; types: event_type alone; hourly:
-    // all three) — never the full width
-    scansOf("events_resample").foreach { scan =>
-      val read = scan.requiredSchema.fieldNames.toSet
-      assert(read.subsetOf(Set("event_type", "ts", "value")) && read.nonEmpty,
-        s"resample scan should read a subset of 3 columns, got $read")
-    }
   }
 
   test("agg_sum_groupby reads only the grouping and aggregated columns") {
@@ -73,19 +65,6 @@ class ScanPruningSpec extends SparkSpec {
       val read = scan.requiredSchema.fieldNames.toSet
       assert(!read.contains("l_comment") && read.size <= 6,
         s"lineitem scan should be column-pruned, got $read")
-    }
-  }
-
-  test("events filters are pushed down to the parquet reader") {
-    // join_asof filters event_type twice (purchase/signup); both scans
-    // must carry the predicate as a pushed data filter, where parquet
-    // row-group statistics can act on it
-    val ss = scansOf("join_asof")
-    assert(ss.size >= 2)
-    ss.foreach { scan =>
-      val pushed = scan.metadata.getOrElse("PushedFilters", "")
-      assert(pushed.contains("EqualTo(event_type"),
-        s"expected event_type pushdown, got: $pushed")
     }
   }
 

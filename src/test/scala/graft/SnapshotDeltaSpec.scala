@@ -84,18 +84,6 @@ class SnapshotDeltaSpec extends SparkSpec {
     }
   }
 
-  /** All nodes of a physical plan, through AQE and its query stages. */
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec        => Seq(q.plan)
-      case other                    => other.children
-    }
-    p +: kids.flatMap(allNodes)
-  }
-
   /** `body` with `autoBroadcastJoinThreshold` set to `bytes`, so that
     * updatedNarrow's changed-key budget is `bytes / 64`.
     */
@@ -112,9 +100,8 @@ class SnapshotDeltaSpec extends SparkSpec {
   test("updatedNarrow plan pin: no shuffle exchange ever carries the " +
        "wide columns — only (key, hash) projections cross the wire; the " +
        "wide sides reach the final join semi-joined and AQE-broadcast") {
-    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.LocalTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-    import org.apache.spark.sql.util.QueryExecutionListener
     // a genuinely wide shape: 20 compared columns
     val cols = (1 to 20).map(i => s"c$i")
     def wide(seed: Int): DataFrame = {
@@ -124,29 +111,14 @@ class SnapshotDeltaSpec extends SparkSpec {
           cols.map(c => concat(lit(c), $"id" % lit(seed)).as(c)): _*)
       base
     }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     // every execution the call and its result run: the steering list's
     // collect as well as the final query
-    val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
-        seen.put(qe)
-      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit =
-        seen.put(qe)
-    }
-    val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    spark.listenerManager.register(listener)
-    val (df, executions) = try {
+    val (df, executions) = executionsOf {
       val df = SnapshotDelta.updatedNarrow(wide(7), wide(11), "pid", cols)
       df.collect() // materialize so AQE finalizes the plan
-      // listener events arrive in order: once the marker is seen, every
-      // execution before it has been reported
-      spark.range(1).toDF("marker").collect()
-      (df, Iterator.continually(
-          seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(qe => qe != null &&
-          !qe.analyzed.output.exists(_.name == "marker"))
-        .toSeq)
-    } finally spark.listenerManager.unregister(listener)
+      df
+    }
     assert(executions.size >= 2,
       s"expected the steering collect and the final query, saw ${executions.size}")
     val widths = executions.flatMap(qe => allNodes(qe.executedPlan))
