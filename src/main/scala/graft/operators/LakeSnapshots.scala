@@ -54,9 +54,9 @@ object LakeSnapshots {
     // would silently MISS its deleted rows; loud until retired (a
     // rewrite materializes them as ordinary file replacements)
     ((fromVersion + 1) to toVersion).foldLeft(
-      LakeLog.snapshotAtPruned(dir, fromVersion, None, _ => false).eqs) {
+      LakeLog.snapshotAt(dir, fromVersion).eqs) {
       (prev, v) =>
-        val cur = LakeLog.snapshotAtPruned(dir, v, None, _ => false).eqs
+        val cur = LakeLog.snapshotAt(dir, v).eqs
         require(prev == cur,
           s"graft_lake $dir: version $v changed the equality-delete " +
             "set — the change feed cannot represent equality-delete " +

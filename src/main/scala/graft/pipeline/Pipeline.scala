@@ -100,34 +100,54 @@ object Pipeline {
     }
   }
 
-  /** Run the full pipeline. Returns what was ingested. */
+  /** Run the full pipeline. Returns what was ingested. The run log is
+    * persisted whether the run succeeds or fails; a failed run's last
+    * event names the exception, which then propagates unchanged.
+    */
   def run(spark: SparkSession, cfg: Config,
           log: RunLog = new RunLog()): Seq[LakeIngest.Ingested] = {
-    log("Starting ABR ETL Process")
-    checkDisabled(spark, cfg, log)
-    cfg.zipFile.foreach { z =>
-      val names = Extract.unzip(z, cfg.stagingDir)
-      log(s"Extracted ${names.size} files from $z")
+    var failure: Throwable = null
+    try {
+      log("Starting ABR ETL Process")
+      checkDisabled(spark, cfg, log)
+      cfg.zipFile.foreach { z =>
+        val names = Extract.unzip(z, cfg.stagingDir)
+        log(s"Extracted ${names.size} files from $z")
+      }
+      val loaded = LakeIngest.ingest(
+        spark, cfg.stagingDir, cfg.lakeRoot, cfg.schemas, cfg.delimiter)
+      loaded.foreach(i => log(s"Loaded ${i.file} -> ${i.dataset}/importdate=${i.importdate}"))
+      loaded.map(_.dataset).distinct.foreach { ds =>
+        cfg.hooks.getOrElse(ds, Nil).foreach(_(spark, cfg, ds, log))
+      }
+      // delete staging files after a successful load (reference S10); the
+      // reference's CleanUp also unlinks the downloaded archive
+      // (abr-etl.go:52-57)
+      loaded.foreach { i =>
+        java.nio.file.Files.deleteIfExists(
+          java.nio.file.Paths.get(cfg.stagingDir, i.file))
+      }
+      cfg.zipFile.foreach(z =>
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(z)))
+      log(s"Cleaned up ${loaded.size} staging files")
+      log("ABR ETL Process complete")
+      loaded
+    } catch {
+      case e: Throwable =>
+        failure = e
+        log(s"ABR ETL Process failed: ${e.getClass.getName}: ${e.getMessage}")
+        throw e
+    } finally {
+      // a log that cannot be written must not mask the run's own failure
+      try persistLog(cfg, log)
+      catch { case e: Throwable if failure != null => failure.addSuppressed(e) }
     }
-    val loaded = LakeIngest.ingest(
-      spark, cfg.stagingDir, cfg.lakeRoot, cfg.schemas, cfg.delimiter)
-    loaded.foreach(i => log(s"Loaded ${i.file} -> ${i.dataset}/importdate=${i.importdate}"))
-    loaded.map(_.dataset).distinct.foreach { ds =>
-      cfg.hooks.getOrElse(ds, Nil).foreach(_(spark, cfg, ds, log))
-    }
-    // delete staging files after a successful load (reference S10); the
-    // reference's CleanUp also unlinks the downloaded archive
-    // (abr-etl.go:52-57)
-    loaded.foreach { i =>
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(cfg.stagingDir, i.file))
-    }
-    cfg.zipFile.foreach(z =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(z)))
-    log(s"Cleaned up ${loaded.size} staging files")
-    log("ABR ETL Process complete")
-    // O5: persist the structured event stream, one JSON object per line,
-    // under LOGS/<runId>.jsonl (the CloudWatch-stream analog)
+  }
+
+  /** O5: persist the structured event stream, one JSON object per line,
+    * under LOGS/<runId>.jsonl (the CloudWatch-stream analog).
+    */
+  private def persistLog(cfg: Config, log: RunLog): Unit =
     cfg.runId.foreach { id =>
       val dir = java.nio.file.Paths.get(cfg.lakeRoot, "LOGS")
       java.nio.file.Files.createDirectories(dir)
@@ -137,8 +157,6 @@ object Pipeline {
       java.nio.file.Files.writeString(
         dir.resolve(s"$id.jsonl"), lines.mkString("\n"))
     }
-    loaded
-  }
 }
 
 /** The Agency_Data post-load hook: register/repair the table, pick the two

@@ -502,9 +502,8 @@ object LakeQueries {
     // identity-partition column is CONSUMED by the scan (tuple-exact
     // enforcement — Spark drops its Filter node), which unlocks the
     // aggregate pushdown: the grouped live counts answer from the
-    // manifest alone, loading only the matching partitions' segments
-    // (counterized in LakeMetaFilterSpec). The oracle restates the
-    // filtered counts from rows.
+    // manifest alone (pinned in LakeMetaFilterSpec). The oracle
+    // restates the filtered counts from rows.
     "lake_filtered_meta" -> ((s, dir) => {
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_fmeta")
@@ -551,8 +550,8 @@ object LakeQueries {
     // the scan consumes it outright (strict projection: each month
     // partition falls wholly in or out of the range — no identity
     // column involved), which lets the COUNT/MIN/MAX answer from the
-    // manifest alone, loading only the matching months' segments (plan
-    // + segment-read pins in LakeHiddenConsumptionSpec). The
+    // manifest alone (plan and zero-footer pins in
+    // LakeHiddenConsumptionSpec). The
     // month-aligned DELETE drops whole partitions copy-on-write — the
     // metadata answer must see them gone. The oracle restates the
     // surviving range from rows.
@@ -1117,8 +1116,8 @@ object LakeQueries {
     // recomputes exact per-file sums from the immutable bytes and
     // amends the manifest (dataChange=false). The final aggregate must
     // then serve from the manifest with the same exactness the oracle
-    // recomputes from rows (decline/restore/DV-skip/tree-segment pins
-    // in LakeAnalyzeSpec).
+    // recomputes from rows (decline/restore/DV-skip pins in
+    // LakeAnalyzeSpec).
     "lake_analyze_meta" -> ((s, dir) => {
       LakeCatalogs.register(s)
       val tbl = tableId(dir, "lake_anlz")

@@ -36,9 +36,7 @@ import org.apache.spark.sql.types._
   *     physical encoding is skipped rather than misread;
   *   - the amendment commits through the log's normal retry loop
   *     ([[LakeLog.commit]] `statsAmend`): files replaced concurrently
-  *     drop out silently (their stats left with them), and manifest-
-  *     tree segments holding amended files rewrite so no reused
-  *     segment can serve stale facts.
+  *     drop out silently (their stats left with them).
   *
   * Scale shape: ONE distributed scan of only the files needing facts
   * (grouped per file via `_metadata.file_name`), driver collect of

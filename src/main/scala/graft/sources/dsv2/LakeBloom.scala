@@ -29,10 +29,9 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, St
   *     footer read, never correctness.
   *
   * Configuration: table property `bloom.columns` = comma-separated
-  * source columns (validated at CREATE); `graft.lake.bloom.bits`
-  * system property sizes the filter (default 2^16 bits = 8 KiB per
-  * (file, column) — ~1% fpp at 6.5 k distinct values, degrading
-  * gracefully above).
+  * source columns (validated at CREATE); each filter has [[bits]] =
+  * 2^16 bits = 8 KiB per (file, column) — ~1% fpp at 6.5 k distinct
+  * values, degrading gracefully above.
   *
   * Hashing contract: the writer (internal values) and the pruner
   * (pushed-filter literals) MUST canonicalize identically — numerics/
@@ -45,13 +44,7 @@ object LakeBloom {
   val ColKey = "bloom.columns"
 
   /** Bits per (file, column) filter; power of two. */
-  def bits: Int = {
-    val b = sys.props.get("graft.lake.bloom.bits").map(_.toInt)
-      .getOrElse(1 << 16)
-    require(b >= 64 && (b & (b - 1)) == 0,
-      s"graft.lake.bloom.bits must be a power of two >= 64, got $b")
-    b
-  }
+  val bits: Int = 1 << 16
 
   /** Double-hashing probe count (k). */
   val Hashes = 6

@@ -127,8 +127,7 @@ class LakeChangesScan(dir: String, projected: StructType,
     * the vacuum already removed.
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    // version-only head resolution: a full current() would materialize
-    // every manifest segment just to learn the head number
+    // version-only head resolution: no manifest read to learn the head
     val head = LakeLog.currentVersion(dir).getOrElse(
       throw new IllegalStateException(
         s"cannot read the change feed of unlogged directory $dir — " +
@@ -144,21 +143,15 @@ class LakeChangesScan(dir: String, projected: StructType,
     require(from <= to,
       s"change-feed range must go forward: $from .. $to")
     val cols = LakeTableIO.columnRefs(projected)
-    // the carried full-metadata view (r16): ref-adding versions need
-    // the FULL prior-file stats; across an N-epoch replay the carry
-    // pays that read once and catches up by O(new segments) per
-    // version — see [[LakeTableIO.CdcCarry.fullFor]]
-    var carry: Option[LakeTableIO.CdcCarry] = None
     (from to to).flatMap { v =>
       // the default start on a trimmed log opens with the snapshot;
       // an EXPLICIT startingVersion is a delta cursor, like the stream's
       val asSnapshot =
         v == from && startingVersion.isEmpty && earliest > 0
-      // delta versions plan only their own files — the delta-shaped
-      // read loads O(commit) manifest segments, not O(table)
-      val snap =
-        if (asSnapshot) LakeLog.snapshotAt(dir, v)
-        else LakeLog.snapshotAtDelta(dir, v)
+      // one manifest read per version: its added/removed delta plans
+      // the events, its complete per-file stats serve a ref-adding
+      // version's delete side
+      val snap = LakeLog.snapshotAt(dir, v)
       // equality-delete commits (the upsert-epoch shape) are fully
       // representable (r15): planCdcVersion derives the delete side
       // from the refs' key sets (pre-images from prior files, scoped
@@ -170,14 +163,7 @@ class LakeChangesScan(dir: String, projected: StructType,
           ((snap.removed.nonEmpty && snap.dataChange) ||
            snap.eqs.exists(_.version == v)))
         Seq.empty
-      else {
-        val (c2, fullOpt) = LakeTableIO.CdcCarry.fullFor(carry, dir,
-          None, v, snap, isFull = asSnapshot,
-          needsFull = !asSnapshot && snap.eqs.exists(_.version == v))
-        carry = c2
-        LakeTableIO.planCdcVersion(dir, snap, cols, pushed, asSnapshot,
-          fullOpt)
-      }
+      else LakeTableIO.planCdcVersion(dir, snap, cols, pushed, asSnapshot)
     // row-path pin when any split is positional — an append-only
     // replay stays columnar (constant _change_type/_version vectors)
     }.toArray match { case ps => LakeTableIO.pinRowIfPositionalCdc(ps) }

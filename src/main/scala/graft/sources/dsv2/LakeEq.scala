@@ -335,12 +335,10 @@ object LakeEq {
     * reports NULL, uniformly. The exact arm is a driver-side
     * key-column read per attached file; a broadly-attached ref on a
     * 5k-file table must not silently turn a metadata query into a
-    * data scan. System property for tests/ops; default 64 attached
-    * files ≈ the cost class of the stat-less footer-fallback sweep
-    * the inventories already tolerate.
+    * data scan. 64 attached files ≈ the cost class of the stat-less
+    * footer-fallback sweep the inventories already tolerate.
     */
-  def probeMaxFiles: Int =
-    Integer.getInteger("graft.lake.inventory.probeMaxFiles", 64)
+  val probeMaxFiles: Int = 64
 
   /** The ONE per-file scoping memo + probe-budget judgment both
     * inventories (`db.t.files`, `db.t.partitions`) share — a budget

@@ -29,12 +29,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * and the streaming source possible; [[LakeLog.expire]] is the explicit
   * vacuum that trades history for space.
   *
-  * Scale notes: a manifest is one small JSON object read once per query
-  * plan — driver-side metadata, never shipped to executors; at 100 TB
-  * the file LIST is the scaling dimension (millions of entries), and the
-  * flat complete-set encoding here would graduate to Iceberg-style
-  * manifest trees, but every contract (atomic rename, complete-set
-  * semantics, conflict detection) carries over unchanged.
+  * Scale notes: one flat JSON manifest per version is the design. It
+  * lists every data file with its stats and partition tuple, and is read
+  * once per query plan on the driver, never shipped to executors. A
+  * manifest therefore grows with the table's file count, and a commit
+  * rewrites it whole: O(files) manifest I/O per commit and per plan.
+  * That is the accepted limit at this system's scale (a weekly table of
+  * a few files); a table with millions of files would need a manifest
+  * split into shared, reusable parts, and the tree encoding that once
+  * did this is no longer read (see `readManifestOnce`).
   *
   * Unlogged directories interop both ways: reads fall back to a raw
   * directory listing, and the first logged commit BOOTSTRAPS a v0
@@ -50,53 +53,6 @@ object LakeLog {
     */
   val manifestReads = new java.util.concurrent.atomic.AtomicLong()
   val logListings = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Test instrumentation for the manifest TREE: segment files read /
-    * bytes read since process start. The bounded-manifest-I/O pins
-    * (partition-filtered plans on many-file tables read only matching
-    * segments) count these.
-    */
-  val segmentReads = new java.util.concurrent.atomic.AtomicLong()
-  val segmentBytes = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Files-per-manifest ceiling for the FLAT encoding: a snapshot
-    * listing more files than this graduates to the manifest tree
-    * (segment sidecars + a segment list). Production default keeps
-    * small tables flat (one read, no indirection); tests lower it via
-    * the system property to exercise the tree at fixture scale.
-    */
-  def inlineThreshold: Int =
-    sys.props.get("graft.lake.manifest.inline.threshold").map(_.toInt)
-      .getOrElse(2048)
-
-  /** Distinct-tuple ceiling for a segment's prune summary: past this
-    * the summary is dropped (segment always loaded) rather than grown
-    * unboundedly — commits write per-partition files, so real segments
-    * stay far under it.
-    */
-  private val maxSummaryTuples = 64
-
-  private def segDir(dir: String): Path = new Path(logDir(dir), "seg")
-
-  /** Immutable-segment content cache (name+table-keyed): segments never
-    * change once written, so commits can compute reuse and repeated
-    * plans can skip re-reads without any invalidation protocol. Bounded
-    * LRU — eviction only costs a re-read.
-    */
-  private val segCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String,
-          (Seq[String], Map[String, LakeStats.FileStats],
-            Map[String, Seq[String]])](128, 0.75f, true) {
-        override def removeEldestEntry(
-            e: JMap.Entry[String, (Seq[String],
-              Map[String, LakeStats.FileStats],
-              Map[String, Seq[String]])]): Boolean =
-          // overridable so bounded-I/O pins can model the 100 TB
-          // regime (more segments than the cache holds) on small
-          // fixtures; production default 4096
-          size() > Integer.getInteger("graft.lake.segcache.max", 4096)
-      })
 
   /** One committed table version. `files` is the complete data-file set
     * (names relative to the table dir); `added`/`removed` are this
@@ -150,7 +106,6 @@ object LakeLog {
                             updatePre: Map[String, Seq[String]] = Map.empty,
                             updatePost: Seq[String] = Seq.empty,
                             parts: Map[String, Seq[String]] = Map.empty,
-                            segments: Seq[SegRef] = Seq.empty,
                             // live EQUALITY-DELETE files ([[LakeEq]]):
                             // each applies to data files with a KNOWN
                             // add version < its commit version. Carried
@@ -159,30 +114,6 @@ object LakeLog {
                             // only by rewrite_deletes / restored
                             // verbatim by rollback (eqsOverride).
                             eqs: Seq[LakeEq.EqRef] = Seq.empty)
-
-  /** One MANIFEST-TREE segment reference: an immutable, content-
-    * addressed sidecar (`_log/seg/<uuid>.json`) holding a slice of the
-    * snapshot's per-file metadata (names + stats + tuples). Manifests
-    * past [[inlineThreshold]] files store a segment LIST instead of the
-    * flat per-file maps — Iceberg's manifest-list/manifest-file split:
-    *
-    *   - commits REUSE every parent segment untouched by the delta, so
-    *     a 10-file append to a 10⁶-file table writes one new segment +
-    *     a small manifest, not a 10⁶-entry JSON (O(delta) commit I/O);
-    *   - `tuples` summarizes the segment's distinct partition tuples
-    *     (when all files carry one and few are distinct — the normal
-    *     shape, since commits write per-partition files), so a
-    *     partition-filtered plan loads ONLY matching segments
-    *     ([[snapshotPruned]]); None = mixed/unknown, always loaded.
-    *
-    * Segments are immutable: once written they never change, so
-    * version history shares them structurally and a process-wide cache
-    * serves re-reads.
-    */
-  final case class SegRef(name: String, n: Int,
-                          tuples: Option[Seq[Seq[String]]],
-                          lo: Option[String] = None,
-                          hi: Option[String] = None)
 
   def logDir(dir: String): Path = new Path(dir, "_log")
 
@@ -247,29 +178,14 @@ object LakeLog {
   }
 
   def snapshotAt(dir: String, version: Long,
-                 branch: Option[String] = None): Snapshot =
-    snapshotAtPruned(dir, version, branch, _ => true)
-
-  /** [[snapshotAt]] with SEGMENT-LEVEL pruning: on a manifest-tree
-    * snapshot, only segments `keepSeg` admits are loaded — the returned
-    * snapshot's per-file maps (files/stats/parts) cover exactly those
-    * segments (plus every file of summary-less segments, loaded
-    * conservatively). The caller owns soundness of the predicate: a
-    * partition-filtered plan passes the same tuple judgment file-level
-    * pruning would apply, so a dropped segment's files were provably
-    * excluded anyway. Flat manifests ignore the predicate (one read,
-    * complete view).
-    */
-  def snapshotAtPruned(dir: String, version: Long,
-                       branch: Option[String],
-                       keepSeg: SegRef => Boolean): Snapshot = {
+                 branch: Option[String] = None): Snapshot = {
     val fs = fsFor(dir)
     val p = new Path(ld(dir, branch), manifestName(version))
     require(fs.exists(p),
       s"no snapshot v$version in $dir${branch.fold("")(b => s"@$b")} " +
         s"(expired or never committed); " +
         s"available: ${versions(dir, branch).mkString(", ")}")
-    readManifest(fs, dir, p, keepSeg)
+    readManifest(fs, p)
   }
 
   /** Head resolution — the per-query-plan hot path. The naive form
@@ -289,70 +205,10 @@ object LakeLog {
     * the listing (branches are short-lived audit refs).
     */
   def current(dir: String, branch: Option[String] = None): Option[Snapshot] =
-    currentPruned(dir, branch, _ => true)
+    headVersion(dir, branch).map(snapshotAt(dir, _, branch))
 
-  /** [[current]] with segment-level pruning (see [[snapshotAtPruned]]). */
-  def currentPruned(dir: String, branch: Option[String],
-                    keepSeg: SegRef => Boolean): Option[Snapshot] =
-    headVersion(dir, branch).map(snapshotAtPruned(dir, _, branch, keepSeg))
-
-  /** DELTA-shaped snapshot read: the commit's inline fields (added/
-    * removed/dvs/dvAdded/...) complete, but per-file metadata (stats/
-    * tuples) loaded only for segments whose NAME RANGE intersects this
-    * commit's own files — the shape CDC planning needs. On a tree
-    * table a commit's files land in one fresh segment, so planning a
-    * delta version reads O(1) segments instead of O(table). Flat
-    * manifests return the full snapshot (one read either way).
-    */
-  def snapshotAtDelta(dir: String, version: Long,
-                      branch: Option[String] = None): Snapshot = {
-    val skeleton = snapshotAtPruned(dir, version, branch, _ => false)
-    // a flat manifest's "skeleton" IS the complete snapshot (keepSeg
-    // only applies to segment lists) — one read, done
-    if (skeleton.segments.isEmpty) return skeleton
-    val wanted = (skeleton.added ++ skeleton.dvAdded.keys).toSet
-    if (wanted.isEmpty) return skeleton
-    // a commit's ADDED files live exactly in the segments it CREATED
-    // (kept parent segments hold only parent files, and commits dedupe
-    // their added set against the base) — diffing the parent's segment
-    // list identifies them without any name heuristics. UUID file
-    // names make pure range pruning weak, so the range check only has
-    // to cover dvAdded targets (pre-existing files) and the
-    // expired-parent fallback.
-    val parentRefs: Set[String] =
-      if (version <= 0) Set.empty
-      else
-        try snapshotAtPruned(dir, version - 1, branch, _ => false)
-          .segments.map(_.name).toSet
-        catch {
-          // ONLY the expiry signals degrade to name-range pruning (the
-          // result stays conservative); genuine corruption of a
-          // still-retained parent must surface, not be masked as
-          // "expired" (r12 advice). A mid-read vacuum race surfaces as
-          // an IOException (readManifest's retry exhausts, or a
-          // SegmentMissingException) — disambiguate by probing whether
-          // the parent manifest still exists: gone = expiry, present =
-          // real corruption.
-          case _: IllegalArgumentException => Set.empty // expired
-          case e: java.io.IOException =>
-            if (!fsFor(dir).exists(new Path(ld(dir, branch),
-                manifestName(version - 1)))) Set.empty // vacuum race
-            else throw e
-        }
-    val dvWanted = skeleton.dvAdded.keySet
-    val rangeWanted = if (parentRefs.isEmpty) wanted else dvWanted
-    snapshotAtPruned(dir, version, branch, r =>
-      (parentRefs.nonEmpty && !parentRefs.contains(r.name)) ||
-        (rangeWanted.nonEmpty && ((r.lo, r.hi) match {
-          case (Some(lo), Some(hi)) =>
-            rangeWanted.exists(n => n >= lo && n <= hi)
-          case _ => true // summary-less: load conservatively
-        })))
-  }
-
-  /** Head VERSION without materializing the snapshot — what callers
-    * that only range over versions (CDC planning) should use on a
-    * tree table (a full `current()` loads every segment).
+  /** Head VERSION without reading its manifest — what callers that
+    * only range over versions (CDC planning) need.
     */
   def currentVersion(dir: String): Option[Long] = headVersion(dir, None)
 
@@ -384,14 +240,14 @@ object LakeLog {
     * branch, so branch-heavy WAP workflows keep O(new-versions)
     * planning too), served from a lazily-extended hint (`_ops.json`
     * in the ref's own log dir — the epoch-ref pattern): a call reads
-    * the hint, loads only manifests ABOVE its high-water as SKELETONS
-    * (zero segment I/O), and rewrites the hint covering the new head.
+    * the hint, loads only manifests ABOVE its high-water, and rewrites
+    * the hint covering the new head.
     * Amortized manifest reads per call = new versions since the last
     * call — what lets [[LakeTx.consistentView]], [[expire]]'s marker
     * scan, and [[lastCommittedEpoch]]'s branch fallback plan cuts on a
     * long history without touching every manifest. The hint is
     * derived data over immutable manifests: racing writers converge,
-    * a torn/missing hint just means a full (skeleton) rescan, entries
+    * a torn/missing hint just means a full rescan, entries
     * for expired versions drop out on rewrite, and a dropped branch
     * takes its hint with its log dir.
     */
@@ -416,7 +272,7 @@ object LakeLog {
     val entries = vs.map { v =>
       v -> cached.getOrElse(v, {
         fresh += 1
-        snapshotAtPruned(dir, v, branch, _ => false).operation
+        snapshotAt(dir, v, branch).operation
       })
     }
     // rewrite when anything changed: new versions appended or expired
@@ -603,9 +459,7 @@ object LakeLog {
           s"(earliest: ${all.headOption.map(_.timestampMs)})"))
   }
 
-  private def readManifest(fs: FileSystem, dir: String, p: Path,
-                           keepSeg: SegRef => Boolean = _ => true)
-      : Snapshot = {
+  private def readManifest(fs: FileSystem, p: Path): Snapshot = {
     // Manifests are write-once, but the PUBLISH rename is not atomic on
     // every filesystem w.r.t. readers — Hadoop's ChecksumFileSystem
     // moves the data file and its .crc sidecar in two steps, so a
@@ -613,18 +467,12 @@ object LakeLog {
     // (caught live in LakeLogConcurrencySpec under 32-way commit
     // contention). Any read error on an existing manifest is therefore
     // transient; a bounded retry converges once the rename completes.
-    // EXCEPTION: a segment sidecar that is MISSING is permanent tree
-    // corruption (segments publish before the manifest that references
-    // them, so no rename race can hide one) — fail in one attempt,
-    // naming the segment, instead of burning 50 retries and reporting
-    // the manifest as the unreadable file.
     var lastErr: java.io.IOException = null
     var attempt = 0
     while (attempt < 50) {
       attempt += 1
-      try return readManifestOnce(fs, dir, p, keepSeg)
+      try return readManifestOnce(fs, p)
       catch {
-        case e: SegmentMissingException => throw e
         case e: java.io.IOException =>
           lastErr = e
           Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
@@ -635,24 +483,19 @@ object LakeLog {
       s"manifest $p unreadable after $attempt attempts", lastErr)
   }
 
-  /** A manifest references a segment sidecar that no longer exists —
-    * external deletion or disk corruption, never a publish race (the
-    * commit protocol writes all segments before renaming the manifest
-    * into place). Non-retryable; carries the failing segment path so
-    * tree corruption is diagnosable from the first error.
-    */
-  final class SegmentMissingException(p: Path,
-                                      cause: java.io.FileNotFoundException)
-    extends java.io.IOException(
-      s"segment sidecar $p referenced by a published manifest is " +
-        "missing (tree corruption or external deletion)", cause)
-
-  private def readManifestOnce(fs: FileSystem, dir: String, p: Path,
-                               keepSeg: SegRef => Boolean): Snapshot = {
+  private def readManifestOnce(fs: FileSystem, p: Path): Snapshot = {
     manifestReads.incrementAndGet()
     val in = fs.open(p)
     val bytes = try in.readAllBytes() finally in.close()
     val m = mapper.readValue(bytes, classOf[JMap[String, Object]])
+    // the retired manifest-tree encoding kept its file list in segment
+    // sidecars and wrote no `files` key — read as flat it would be an
+    // EMPTY table, so it fails loud instead (not retried: permanent)
+    if (m.containsKey("segments"))
+      throw new IllegalStateException(
+        s"manifest $p uses the manifest-tree encoding (a `segments` " +
+          "list instead of `files`), which is no longer read; only flat " +
+          "manifests are supported")
     def strs(k: String): Seq[String] = m.get(k) match {
       case l: JList[_] => l.asScala.map(_.toString).toSeq
       case _           => Seq.empty
@@ -674,7 +517,7 @@ object LakeLog {
       }.toMap
       case _ => Map.empty // pre-DV manifests
     }
-    val base = Snapshot(lng("version"), lng("timestampMs"),
+    Snapshot(lng("version"), lng("timestampMs"),
       String.valueOf(m.get("operation")), strs("files"), strs("added"),
       strs("removed"), lng("addedRows"), dataChange,
       dvMap("dvs"), dvMap("dvAdded"),
@@ -682,90 +525,10 @@ object LakeLog {
       dvMap("updatePre"), strs("updatePost"), // pre-pairing: empty
       dvMap("parts"), // pre-partitioning manifests: empty
       eqs = LakeEq.fromJson(m.get("eqs"))) // pre-eq manifests: empty
-    m.get("segments") match {
-      case l: JList[_] =>
-        // manifest tree: the flat per-file maps live in segment
-        // sidecars; materialize the admitted ones
-        val refs: Seq[SegRef] = l.asScala.toSeq.map { e =>
-          val sm = e.asInstanceOf[JMap[String, Object]]
-          val tuples = sm.get("tuples") match {
-            case tl: JList[_] => Some(tl.asScala.toSeq.map {
-              case t: JList[_] => t.asScala.map(_.toString).toSeq
-              case other       => Seq(String.valueOf(other))
-            })
-            case _ => None
-          }
-          SegRef(String.valueOf(sm.get("name")),
-            sm.get("n").asInstanceOf[Number].intValue(), tuples,
-            Option(sm.get("lo")).map(String.valueOf),
-            Option(sm.get("hi")).map(String.valueOf))
-        }
-        var files = Vector.empty[String]
-        var stats = Map.empty[String, LakeStats.FileStats]
-        var parts = Map.empty[String, Seq[String]]
-        refs.filter(keepSeg).foreach { r =>
-          val (f, st, pt) = readSegment(fs, dir, r.name)
-          files ++= f; stats ++= st; parts ++= pt
-        }
-        base.copy(files = files.sorted, stats = stats, parts = parts,
-          segments = refs)
-      case _ => base
-    }
   }
 
-  /** Load one immutable segment sidecar (cache-first; a miss reads and
-    * counts toward [[segmentReads]]/[[segmentBytes]]).
-    */
-  private def readSegment(fs: FileSystem, dir: String, name: String)
-      : (Seq[String], Map[String, LakeStats.FileStats],
-          Map[String, Seq[String]]) = {
-    val p = new Path(segDir(dir), name)
-    val key = p.toUri.toString
-    val cached = segCache.get(key)
-    if (cached != null) return cached
-    segmentReads.incrementAndGet()
-    val in =
-      try fs.open(p)
-      catch { case e: java.io.FileNotFoundException =>
-        throw new SegmentMissingException(p, e) }
-    val bytes = try in.readAllBytes() finally in.close()
-    segmentBytes.addAndGet(bytes.length.toLong)
-    val m = mapper.readValue(bytes, classOf[JMap[String, Object]])
-    val files = m.get("files") match {
-      case l: JList[_] => l.asScala.map(_.toString).toSeq
-      case _           => Seq.empty
-    }
-    val parts = m.get("parts") match {
-      case pm: JMap[_, _] => pm.asScala.map { case (k, v) =>
-        String.valueOf(k) -> (v match {
-          case l: JList[_] => l.asScala.map(_.toString).toSeq
-          case _           => Seq.empty[String]
-        })
-      }.toMap
-      case _ => Map.empty[String, Seq[String]]
-    }
-    val res = (files, LakeStats.fromJson(m.get("stats")), parts)
-    segCache.put(key, res)
-    res
-  }
-
-  /** Drop the immutable-segment cache — test instrumentation so
-    * bounded-I/O pins measure real reads.
-    */
-  def clearSegmentCache(): Unit = segCache.clear()
-
-  /** Serialize `s` to `tmp`. Past [[inlineThreshold]] files the
-    * per-file maps (files/stats/parts) move into immutable segment
-    * sidecars and the manifest stores the segment LIST — every parent
-    * segment whose files all survive is REUSED by reference (O(delta)
-    * commit I/O: a small append to a huge table writes one new segment,
-    * a replace rewrites only the segments its removals touch). Returns
-    * the snapshot carrying its final segment list plus the sidecar
-    * paths created (the caller deletes them if the version race is
-    * lost).
-    */
-  private def writeManifest(fs: FileSystem, dir: String, tmp: Path,
-                            s: Snapshot): (Snapshot, Seq[Path]) = {
+  /** Serialize `s` to `tmp` as one flat, self-contained manifest. */
+  private def writeManifest(fs: FileSystem, tmp: Path, s: Snapshot): Unit = {
     val m = new JHashMap[String, Object]()
     m.put("version", java.lang.Long.valueOf(s.version))
     m.put("timestampMs", java.lang.Long.valueOf(s.timestampMs))
@@ -788,112 +551,11 @@ object LakeLog {
     putDvMap("updatePre", s.updatePre)
     if (s.updatePost.nonEmpty) m.put("updatePost", jl(s.updatePost))
     if (s.eqs.nonEmpty) m.put("eqs", LakeEq.toJson(s.eqs))
-    val threshold = inlineThreshold
-    val (result, created) =
-      if (s.files.size <= threshold) {
-        // flat encoding: one self-contained manifest (today's common
-        // case — small tables never pay the indirection)
-        m.put("files", jl(s.files))
-        putDvMap("parts", s.parts)
-        if (s.stats.nonEmpty) m.put("stats", LakeStats.toJson(s.stats))
-        (s.copy(segments = Seq.empty), Seq.empty[Path])
-      } else {
-        fs.mkdirs(segDir(dir))
-        val fileSet = s.files.toSet
-        // reuse: a parent segment survives iff every file it lists is
-        // still in the snapshot (removed files are NOT — so a segment
-        // touched by a replace rewrites; an unreadable/expired segment
-        // simply falls out and its files re-segment)
-        val kept = s.segments.filter { r =>
-          try readSegment(fs, dir, r.name)._1.forall(fileSet.contains)
-          catch { case _: java.io.IOException => false }
-        }
-        val covered = kept.flatMap(r => readSegment(fs, dir, r.name)._1)
-          .toSet
-        val leftover = s.files.filterNot(covered)
-        // new segments: whole partition-tuple GROUPS bin-packed to the
-        // inline threshold — a chunk boundary never splits a group, so
-        // a group at or past the threshold yields exactly-single-tuple
-        // segments (its < cap remainder rejoins the small-group flow)
-        // and a partition-filtered plan skips non-matching segments
-        // without loading them. Small groups pack together in tuple
-        // order; a bin flushes only when the next group overflows it,
-        // so segment count stays within 2x of the unconstrained
-        // chunking (and equals it for per-partition commit shapes).
-        val cap = math.max(1, threshold)
-        val groups: Seq[Seq[String]] = leftover
-          .groupBy(f => s.parts.getOrElse(f, Seq.empty).mkString("\u0000"))
-          .toSeq.sortBy(_._1).map(_._2.sorted)
-        val chunksB = Seq.newBuilder[Seq[String]]
-        var bin = Vector.empty[String]
-        groups.foreach { g0 =>
-          val full = g0.size / cap * cap
-          g0.take(full).grouped(cap).foreach(chunksB += _)
-          val g = g0.drop(full)
-          if (g.nonEmpty) {
-            if (bin.nonEmpty && bin.size + g.size > cap) {
-              chunksB += bin; bin = Vector.empty
-            }
-            bin ++= g
-          }
-        }
-        if (bin.nonEmpty) chunksB += bin
-        val chunks = chunksB.result()
-        val created = chunks.map { chunk =>
-          val name = s"seg-${java.util.UUID.randomUUID()}.json"
-          val sm = new JHashMap[String, Object]()
-          sm.put("files", jl(chunk))
-          val chunkParts = chunk.flatMap(f =>
-            s.parts.get(f).map(f -> _)).toMap
-          if (chunkParts.nonEmpty) {
-            val pm = new JHashMap[String, Object]()
-            chunkParts.toSeq.sortBy(_._1).foreach { case (k, v) =>
-              pm.put(k, jl(v)) }
-            sm.put("parts", pm)
-          }
-          val chunkStats = chunk.flatMap(f =>
-            s.stats.get(f).map(f -> _)).toMap
-          if (chunkStats.nonEmpty)
-            sm.put("stats", LakeStats.toJson(chunkStats))
-          val p = new Path(segDir(dir), name)
-          val out = fs.create(p, false)
-          try out.write(mapper.writeValueAsBytes(sm)) finally out.close()
-          // prune summary: the distinct tuples, when every file has one
-          // and few are distinct; otherwise none (always loaded)
-          val tuples =
-            if (chunk.forall(chunkParts.contains)) {
-              val d = chunk.map(chunkParts).distinct
-              if (d.size <= maxSummaryTuples) Some(d) else None
-            } else None
-          segCache.put(p.toUri.toString,
-            (chunk, chunkStats, chunkParts))
-          // name-range summary: a delta read (CDC planning a commit's
-          // own files) loads only segments whose [lo, hi] intersects
-          // the wanted names — O(1) segments for a fresh commit
-          (SegRef(name, chunk.size, tuples,
-            Some(chunk.min), Some(chunk.max)), p)
-        }
-        val refs = kept ++ created.map(_._1)
-        val segList = new ArrayList[Object](refs.size)
-        refs.foreach { r =>
-          val sm = new JHashMap[String, Object]()
-          sm.put("name", r.name)
-          sm.put("n", java.lang.Integer.valueOf(r.n))
-          r.tuples.foreach { ts =>
-            val tl = new ArrayList[Object](ts.size)
-            ts.foreach(t => tl.add(jl(t)))
-            sm.put("tuples", tl)
-          }
-          r.lo.foreach(sm.put("lo", _))
-          r.hi.foreach(sm.put("hi", _))
-          segList.add(sm)
-        }
-        m.put("segments", segList)
-        (s.copy(segments = refs), created.map(_._2))
-      }
+    m.put("files", jl(s.files))
+    putDvMap("parts", s.parts)
+    if (s.stats.nonEmpty) m.put("stats", LakeStats.toJson(s.stats))
     val out = fs.create(tmp, true)
     try out.write(mapper.writeValueAsBytes(m)) finally out.close()
-    (result, created)
   }
 
   /** Raw data-file listing (log-oblivious) — bootstrap + legacy reads. */
@@ -946,9 +608,7 @@ object LakeLog {
              // immutable bytes — sums, sketches, blooms for vintages
              // that predate write-time harvesting). Entries for files
              // no longer current at commit time drop silently (their
-             // stats left with them); on manifest-tree tables the
-             // segments holding amended files REWRITE (stats live in
-             // segments — a reused segment would serve stale facts).
+             // stats left with them).
              statsAmend: Map[String, LakeStats.FileStats] = Map.empty,
              // EQUALITY-DELETE files committing WITH this commit
              // ([[LakeEq]]): (sidecar name, key columns, key count) —
@@ -1184,26 +844,13 @@ object LakeLog {
       // partition tuples follow the file set exactly like stats
       val nextParts = (head.map(_.parts).getOrElse(Map.empty) -- removed) ++
         addedParts.view.filterKeys(addedNew.contains)
-      // the parent's segment list is the REUSE base for the manifest
-      // tree (writeManifest keeps every segment the delta left whole);
-      // a segment holding an AMENDED file must rewrite — its embedded
-      // stats are stale the moment the amendment lands
-      val reuseBase = {
-        val segs = head.map(_.segments).getOrElse(Seq.empty)
-        if (liveAmend.isEmpty) segs
-        else segs.filter { r =>
-          try !readSegment(fs, dir, r.name)._1.exists(liveAmend.contains)
-          catch { case _: java.io.IOException => false }
-        }
-      }
       val next = Snapshot(
         nextVersion,
         now(head.map(_.timestampMs)), operation,
         (base.filterNot(removed.toSet) ++ addedNew).distinct.sorted,
         addedNew, removed.sorted, addedRows, dataChange, nextDvs, dvAdded,
         nextStats, updatePre, updatePost.filter(addedNew.contains),
-        nextParts,
-        reuseBase, eqs = nextEqs)
+        nextParts, eqs = nextEqs)
       prePublish()
       tryPublish(fs, dir, next, branch) match {
         case Some(s) => return s
@@ -1255,23 +902,14 @@ object LakeLog {
     val dest = new Path(d, manifestName(s.version))
     if (fs.exists(dest)) return None
     val tmp = new Path(d, s".tmp-${java.util.UUID.randomUUID()}.json")
-    val (written, createdSegs) = writeManifest(fs, dir, tmp, s)
+    writeManifest(fs, tmp, s)
     val won = atomicCreateFrom(fs, tmp, dest)
     fs.delete(tmp, false)
     if (won) {
       // keep MAIN head resolution O(1): refresh the hint per commit
       if (branch.isEmpty) writeHeadHint(dir, s.version)
-      Some(written)
-    } else {
-      // lost the race: the fresh UUID segments are referenced by no
-      // manifest — reclaim now instead of waiting for the vacuum
-      createdSegs.foreach { p =>
-        segCache.remove(p.toUri.toString)
-        try fs.delete(p, false)
-        catch { case _: java.io.IOException => () }
-      }
-      None
-    }
+      Some(s)
+    } else None
   }
 
   // ----- branches: writable refs (write-audit-publish) -----------------
@@ -1503,7 +1141,7 @@ object LakeLog {
         }
       } catch { case _: Exception => None } // torn/absent: log decides
     // ops-hint-backed fallback: amortized O(new versions) manifest
-    // skeletons on BOTH main and branch refs (a fresh stream's first
+    // reads on BOTH main and branch refs (a fresh stream's first
     // epoch on a 10⁶-commit history reads the hint, not the history);
     // the old newest-first manifest walk was O(history) exactly when
     // the query had no prior epoch — every stream's first commit
@@ -1559,14 +1197,12 @@ object LakeLog {
   /** Grace window for orphan deletion: a file published within the last
     * `graceMs` may belong to a writer BETWEEN its publish renames and
     * its log commit — deleting it would let that commit succeed with a
-    * manifest pointing at a vanished file. Production default 10 min
-    * (the Delta/Iceberg vacuum-retention idea at small scale);
-    * overridable per call, and fixtures pass 0 to observe deletions
+    * manifest pointing at a vanished file. 10 min (the Delta/Iceberg
+    * vacuum-retention idea at small scale); the `graceMs` overload
+    * overrides it per call, and fixtures pass 0 to observe deletions
     * synchronously.
     */
-  def defaultExpireGraceMs: Long =
-    sys.props.get("graft.lake.expire.grace.ms").map(_.toLong)
-      .getOrElse(10L * 60 * 1000)
+  val defaultExpireGraceMs: Long = 10L * 60 * 1000
 
   def expire(dir: String, keepLast: Int): (Int, Int) =
     expire(dir, keepLast, defaultExpireGraceMs)
@@ -1585,8 +1221,7 @@ object LakeLog {
     // ref is written right after each commit) is redundant and expires
     // normally, so dead queries don't pin history; only the
     // crash-window marker survives, until the query's next epoch.
-    // amortized O(new versions) metadata reads via the ops hint —
-    // skeletons only, zero segment I/O
+    // amortized O(new versions) manifest reads via the ops hint
     val newestMarker: Set[Long] = operations(dir).flatMap {
       case (v, op) => op match {
         case EpochOpRe(q, e) => Some((q, e.toLong, v))
@@ -1629,22 +1264,6 @@ object LakeLog {
     drop.foreach(v =>
       fs.delete(new Path(logDir(dir), manifestName(v)), false))
     orphans.foreach(f => fs.delete(new Path(dir, f), false))
-    // manifest-tree segments referenced by NO retained manifest (main,
-    // tagged, or branch) are metadata orphans — same grace window as
-    // data files (a just-written segment may belong to a commit racing
-    // its manifest rename)
-    val keptSegs = (keptSnaps ++ branchSnaps)
-      .flatMap(_.segments.map(_.name)).toSet
-    val segD = segDir(dir)
-    if (fs.exists(segD))
-      fs.listStatus(segD).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("seg-") &&
-          !keptSegs.contains(st.getPath.getName) &&
-          st.getModificationTime < horizon)
-        .foreach { st =>
-          segCache.remove(st.getPath.toUri.toString)
-          fs.delete(st.getPath, false)
-        }
     // a crashed multi-table stage ([[LakeTx.stageAppend]]) can leave a
     // scratch subdir under _staging — unreachable by any reader, pure
     // disk leak; reclaim aged ones under the same grace window that

@@ -773,36 +773,6 @@ object LakePartitioning {
     }
   }
 
-  /** The per-tuple judgment [[prune]] applies per file, exposed for
-    * callers that prune COARSER units sharing a tuple (manifest
-    * segments): can a file carrying `tuple` match every relevant
-    * pushed filter? Tuple-less / unresolvable → always true.
-    */
-  def tupleMightMatch(tuple: Option[Seq[String]],
-                      specs: IndexedSeq[Seq[Bound]],
-                      pushed: Array[Filter]): Boolean =
-    tupleJudge(specs, pushed)(tuple)
-
-  /** Curried form of [[tupleMightMatch]]: the filter→transform mapping
-    * is computed ONCE, the returned judge then evaluates many tuples
-    * cheaply (segment summaries carry up to 64 tuples each; a scan
-    * judges every segment's).
-    */
-  def tupleJudge(specs: IndexedSeq[Seq[Bound]], pushed: Array[Filter])
-      : Option[Seq[String]] => Boolean = {
-    if (specs.isEmpty || pushed.isEmpty) return _ => true
-    val relevantBySpec: IndexedSeq[Array[(Filter, Seq[(Bound, Int)])]] =
-      specs.map { bound =>
-        val byCol = bound.zipWithIndex
-          .groupBy(_._1.t.col.toLowerCase)
-        pushed.flatMap(f =>
-          filterColumn(f).map(_.toLowerCase).flatMap(byCol.get)
-            .map(bs => (f, bs)))
-      }
-    if (relevantBySpec.forall(_.isEmpty)) _ => true
-    else t => judgeTuple(t, specs, relevantBySpec)
-  }
-
   private def judgeTuple(
       tuple: Option[Seq[String]], specs: IndexedSeq[Seq[Bound]],
       relevantBySpec: IndexedSeq[Array[(Filter, Seq[(Bound, Int)])]])

@@ -56,15 +56,8 @@ object LakeStats {
     */
   val footerOpens = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Planning-side footer-open bookkeeping (optionally traced via
-    * -Dgraft.debug.footer.trace for test forensics).
-    */
-  def noteFooterOpen(): Unit = {
-    if (sys.props.contains("graft.debug.footer.trace") ||
-        sys.env.contains("GRAFT_FOOTER_TRACE"))
-      new Exception("footer open").printStackTrace()
-    footerOpens.incrementAndGet()
-  }
+  /** Planning-side footer-open bookkeeping. */
+  def noteFooterOpen(): Unit = footerOpens.incrementAndGet()
 
   /** One column's bounds under its FILE-LOCAL name. `kind` tags the
     * decode ("long"|"int"|"double"|"float"|"bool"|"str"); `min`/`max`

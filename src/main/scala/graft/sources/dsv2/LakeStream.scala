@@ -92,14 +92,6 @@ class LakeMicroBatchStream(dir: String, projected: StructType,
   // more commits mid-run doesn't extend this execution
   @volatile private var target: Option[Long] = None
 
-  // CDC mode's carried full-metadata view ([[LakeTableIO.CdcCarry
-  // .fullFor]]): lives across this stream's micro-batches
-  // (planInputPartitions is driver-side and batches replay versions
-  // in order); maintained LAZILY — ref-free versions cost nothing —
-  // and purely an optimization: dropped and reseeded whenever the
-  // version walk doesn't chain forward
-  private var cdcCarry: Option[LakeTableIO.CdcCarry] = None
-
   private def headVersion: Long =
     LakeLog.current(dir).map(_.version).getOrElse(-1L)
 
@@ -202,11 +194,8 @@ class LakeMicroBatchStream(dir: String, projected: StructType,
     var v = from
     var spent = 0L
     while (v < head) {
-      // SKELETON read: the costs (addedRows / added.size) are INLINE
-      // manifest fields — materializing segments here would make every
-      // pacing trigger O(table) manifest I/O on a tree table
-      val c = math.max(0L,
-        cost(LakeLog.snapshotAtPruned(dir, v + 1, None, _ => false)))
+      // the costs (addedRows / added.size) are manifest fields
+      val c = math.max(0L, cost(LakeLog.snapshotAt(dir, v + 1)))
       if (v > from && spent + c > budget) return v
       spent += c
       v += 1
@@ -243,35 +232,20 @@ class LakeMicroBatchStream(dir: String, projected: StructType,
       val cols = LakeTableIO.columnRefs(projected)
       return (a + 1 to b).flatMap { v =>
         val asSnapshot = so.snapshotStart && v == a + 1
-        // delta commits plan only their own files (O(commit) manifest
-        // segments on a tree table); the opening snapshot needs all
-        val snap =
-          if (asSnapshot) LakeLog.snapshotAt(dir, v)
-          else LakeLog.snapshotAtDelta(dir, v)
+        val snap = LakeLog.snapshotAt(dir, v)
         // equality-delete commits (the upsert-epoch shape) are fully
         // representable (r15): planCdcVersion derives delete events
         // from the refs' key sets and insert events from the commit's
         // own post-images; the opening snapshot subtracts carried
         // refs like the batch scan. skipChangeCommits skips
         // ref-adding versions like any other change commit. Same
-        // contract as the batch change feed. The carried full view
-        // ([[LakeTableIO.CdcCarry.fullFor]]) spans MICRO-BATCHES (the
-        // instance field): a long upsert-epoch backlog drains at
-        // O(new segments) planning per epoch instead of O(table);
-        // ref-free versions pay nothing, and a re-planned old batch
-        // (recovery) drops the future-dated carry and reseeds.
+        // contract as the batch change feed.
         if (skipChangeCommits && !asSnapshot &&
             ((snap.removed.nonEmpty && snap.dataChange) ||
              snap.eqs.exists(_.version == v)))
           Seq.empty
-        else {
-          val (c2, fullOpt) = LakeTableIO.CdcCarry.fullFor(cdcCarry,
-            dir, None, v, snap, isFull = asSnapshot,
-            needsFull = !asSnapshot && snap.eqs.exists(_.version == v))
-          cdcCarry = c2
-          LakeTableIO.planCdcVersion(dir, snap, cols, pushed,
-            asSnapshot, fullOpt)
-        }
+        else
+          LakeTableIO.planCdcVersion(dir, snap, cols, pushed, asSnapshot)
       // per-BATCH row-path pin when any split is positional; an
       // append-only backlog drains columnar (constant CDC vectors)
       }.toArray match {
@@ -291,11 +265,8 @@ class LakeMicroBatchStream(dir: String, projected: StructType,
     var openEqs: Seq[LakeEq.EqRef] = Seq.empty
     val added = (a + 1 to b).flatMap { v =>
       val asSnap = so.snapshotStart && v == a + 1
-      // delta commits contribute only their added files; the
-      // delta-shaped read loads O(commit) manifest segments
-      val snap =
-        if (asSnap) LakeLog.snapshotAt(dir, v)
-        else LakeLog.snapshotAtDelta(dir, v)
+      // delta commits contribute only their added files
+      val snap = LakeLog.snapshotAt(dir, v)
       // append-only replay: a version that ADDED an eq ref silently
       // deletes rows this stream already emitted — loud by default
       // (never wrong); under skipChangeCommits its post-images flow

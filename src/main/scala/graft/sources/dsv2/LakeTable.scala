@@ -628,13 +628,11 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
     *
     *   - [[LakePartitioning.exactlyDecidable]]: supported shape,
     *     liftable literal, a deciding transform in EVERY spec vintage;
-    *   - every file carries a tuple, proved from the manifest SKELETON
-    *     (tree: every segment has a tuple summary — written only when
-    *     all its files are tupled; flat: the inline parts map covers
-    *     the file list) — bounded I/O, no segment reads;
+    *   - every file carries a tuple, proved from the manifest (its
+    *     parts map covers the file list);
     *   - no pending multi-tx files (staged files carry no tuples until
     *     published) and not a CDC-configured scan (change feeds range
-    *     over historical commits this skeleton does not vouch for).
+    *     over historical commits this manifest does not vouch for).
     *
     * The scan re-verifies decidability per file at plan time and fails
     * LOUD (never wrong) if a concurrent commit broke the premise.
@@ -657,7 +655,7 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
           try LakePartitioning.bindAll(
             LakePartitioning.specsOf(dir), tableSchema)
           catch { case _: Exception => IndexedSeq.empty }
-        if (specs.isEmpty || !allFilesTupledSkeleton) Array.empty
+        if (specs.isEmpty || !allFilesTupled) Array.empty
         else pushed.filter(f =>
           LakePartitioning.exactlyDecidable(specs, f))
       }
@@ -681,8 +679,8 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
             // snapshot read when nothing could ever prove
         if (remaining.isEmpty) Array.empty
         else try {
-          val (files0, _, stats, parts0) = LakeTableIO.snapshotViewPruned(
-            dir, pinnedVersion, branch, consumed)
+          val (files0, _, stats, parts0) = LakeTableIO.snapshotView(
+            dir, pinnedVersion, branch)
           // restrict the proof DOMAIN to the files the partition-
           // CONSUMED filters keep: those filters are exactly enforced
           // by pruning, so excluded files feed no rows — a filter only
@@ -715,20 +713,16 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
   }
 
   /** Every snapshot file provably carries a partition tuple, judged
-    * from the manifest skeleton alone (zero segment reads).
+    * from the manifest alone.
     */
-  private def allFilesTupledSkeleton: Boolean =
+  private def allFilesTupled: Boolean =
     try {
       if (LakeTx.pendingFor(dir).nonEmpty) return false
       val s = pinnedVersion match {
-        case Some(v) =>
-          LakeLog.snapshotAtPruned(dir, v, branch, _ => false)
-        case None =>
-          LakeLog.currentPruned(dir, branch, _ => false)
-            .getOrElse(return false)
+        case Some(v) => LakeLog.snapshotAt(dir, v, branch)
+        case None    => LakeLog.current(dir, branch).getOrElse(return false)
       }
-      if (s.segments.nonEmpty) s.segments.forall(_.tuples.isDefined)
-      else s.files.forall(s.parts.contains)
+      s.files.forall(s.parts.contains)
     } catch { case scala.util.control.NonFatal(_) => false }
 
   /** V2 predicate pushdown ([[org.apache.spark.sql.connector.read.SupportsPushDownV2Filters]]):
@@ -835,7 +829,7 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
     // CHECK-constraint contradiction ([[LakeChecks]]): a pushed filter
     // provably unsatisfiable under the table's declared constraints
     // (WHERE qty < 0 on a table guaranteeing qty >= 0) plans ZERO
-    // files — driver arithmetic, no manifest segment reads. HEAD reads
+    // files — driver arithmetic, no data-file reads. HEAD reads
     // only: an older snapshot or branch may hold rows deleted before
     // the constraint was added+validated, so time travel keeps the
     // scan. Any lift/parse uncertainty keeps the scan (conservative).
@@ -866,12 +860,8 @@ class LakeScanBuilder(dir: String, tableSchema: StructType,
             if (limitN.isDefined || topN.isDefined) eqFreeJudged
             else None)
     }
-    // manifest-tree fast path: pushed partition filters prune whole
-    // SEGMENTS before their file entries are even read — on a
-    // many-file table the plan's manifest I/O is bounded by the
-    // matching partitions, not the table (flat manifests ignore this)
     val (files, dvs, stats, parts) =
-      LakeTableIO.snapshotViewPruned(dir, pinnedVersion, branch, pushed)
+      LakeTableIO.snapshotView(dir, pinnedVersion, branch)
     new LakeScan(dir, files, tableSchema, projected, pushed,
       pruneGroups = true, pinnedVersion, skipChangeCommits,
       startingVersion, branch, pacing, dvs, stats, parts, consumed,
@@ -2705,9 +2695,7 @@ object LakeTableIO {
   /** Writer row-group size — settable (bytes) so fixtures can force a
     * multi-row-group layout at test scale; production default 128 MB.
     */
-  @volatile var rowGroupBytes: Long =
-    sys.props.get("graft.lake.rowgroup.bytes").map(_.toLong)
-      .getOrElse(128L << 20)
+  @volatile var rowGroupBytes: Long = 128L << 20
 
   /** Writer page-row ceiling — settable so fixtures can force a
     * many-page layout at test scale (page-level positional reads);
@@ -2790,7 +2778,7 @@ object LakeTableIO {
     */
   def snapshotView(dir: String, version: Option[Long] = None,
                    branch: Option[String] = None): SnapView =
-    snapshotViewPruned(dir, version, branch, Array.empty)
+    snapshotViewEq(dir, version, branch)._1
 
   /** [[snapshotView]] PLUS the same snapshot's live eq refs — ONE
     * manifest read, so the refs judged and the files judged can never
@@ -2801,8 +2789,8 @@ object LakeTableIO {
   def snapshotViewEq(dir: String, version: Option[Long] = None,
                      branch: Option[String] = None)
       : (SnapView, Seq[LakeEq.EqRef]) = {
-    // pending decided-tx files union in exactly like snapshotView's
-    // head reads (atomic cross-table visibility); they carry no stats,
+    // pending decided-tx files union into head reads (atomic
+    // cross-table visibility, see [[snapshotView]]); they carry no stats,
     // so every eq-aware consumer reads them as ATTACHED → declines/
     // NULLs conservatively under live refs
     def withPending(files: Seq[String]): Seq[Path] = {
@@ -2827,56 +2815,6 @@ object LakeTableIO {
           case None =>
             ((withPending(LakeLog.rawDataFiles(dir).toSeq), Map.empty,
               Map.empty, Map.empty), Seq.empty)
-        }
-    }
-  }
-
-  /** [[snapshotView]] with manifest-SEGMENT pruning: `pushed` filters
-    * drop whole segments whose tuple summaries provably exclude them —
-    * the per-tuple judgment is EXACTLY [[LakePartitioning.prune]]'s, so
-    * a dropped segment's files would have been file-pruned anyway;
-    * summary-less segments always load. Flat manifests are unaffected.
-    */
-  def snapshotViewPruned(dir: String, version: Option[Long],
-                         branch: Option[String],
-                         pushed: Array[Filter]): SnapView = {
-    val keepSeg: LakeLog.SegRef => Boolean =
-      if (pushed.isEmpty) _ => true
-      else {
-        val specs =
-          try LakePartitioning.bindAll(LakePartitioning.specsOf(dir),
-            tableSchema(dir))
-          catch { case _: Exception => IndexedSeq.empty }
-        if (specs.isEmpty) _ => true
-        else {
-          // the filter→transform mapping computes once per scan; the
-          // judge then runs per summary tuple
-          val judge = LakePartitioning.tupleJudge(specs, pushed)
-          r => r.tuples.forall(_.exists(t => judge(Some(t))))
-        }
-      }
-    version match {
-      case Some(v) =>
-        val s = LakeLog.snapshotAtPruned(dir, v, branch, keepSeg)
-        (s.files.map(new Path(dir, _)), s.dvs, s.stats, s.parts)
-      case None =>
-        def withPending(files: Seq[String])
-            : Seq[Path] = {
-          val pending = LakeTx.pendingFor(dir).flatMap(_.added)
-          (if (pending.isEmpty) files
-           else (files ++ pending).distinct.sorted)
-            .map(new Path(dir, _))
-        }
-        LakeLog.currentPruned(dir, branch, keepSeg) match {
-          case Some(s) if branch.isEmpty =>
-            (withPending(s.files), s.dvs, s.stats, s.parts)
-          case Some(s) =>
-            (s.files.map(new Path(dir, _)), s.dvs, s.stats, s.parts)
-          case None if branch.isDefined => throw new IllegalStateException(
-            s"branch '${branch.get}' does not exist in $dir")
-          case None =>
-            (withPending(LakeLog.rawDataFiles(dir)), Map.empty, Map.empty,
-              Map.empty)
         }
     }
   }
@@ -3206,17 +3144,8 @@ object LakeTableIO {
     * Returned values are Spark INTERNAL format (Long/Int/UTF8String,
     * null for empty/all-null), paired with their output type.
     */
-  /** Snapshot view restricted to the files matching CONSUMED pushed
-    * filters: the manifest tree loads only segments whose tuple
-    * summaries might match (bounded I/O — the r12 verdict's rung 1),
-    * then each file is tuple-judged EXACTLY. None when any file is
-    * undecided (no tuple / unresolvable layout): the metadata answer
-    * declines and the row scan takes over (whose own loud guard
-    * covers the consumed-filter premise).
-    */
-  /** The snapshot's live equality-delete refs ([[LakeEq]]), from the
-    * manifest SKELETON alone — zero segment reads. No log = no eqs;
-    * any other read failure propagates (callers pick their own
+  /** The snapshot's live equality-delete refs ([[LakeEq]]). No log =
+    * no eqs; any other read failure propagates (callers pick their own
     * conservative direction: metadata paths decline, scans fail loud —
     * swallowing here would default to "no deletes", the one direction
     * that resurrects rows).
@@ -3224,13 +3153,17 @@ object LakeTableIO {
   def snapshotEqs(dir: String, version: Option[Long] = None,
                   branch: Option[String] = None): Seq[LakeEq.EqRef] =
     version match {
-      case Some(v) =>
-        LakeLog.snapshotAtPruned(dir, v, branch, _ => false).eqs
+      case Some(v) => LakeLog.snapshotAt(dir, v, branch).eqs
       case None =>
-        LakeLog.currentPruned(dir, branch, _ => false)
-          .map(_.eqs).getOrElse(Seq.empty)
+        LakeLog.current(dir, branch).map(_.eqs).getOrElse(Seq.empty)
     }
 
+  /** Snapshot view restricted to the files matching CONSUMED pushed
+    * filters: each file is tuple-judged EXACTLY. None when any file is
+    * undecided (no tuple / unresolvable layout): the metadata answer
+    * declines and the row scan takes over (whose own loud guard
+    * covers the consumed-filter premise).
+    */
   private def filteredView(
       dir: String, version: Option[Long], branch: Option[String],
       tableSchema: StructType, pushed: Array[Filter])
@@ -3243,12 +3176,10 @@ object LakeTableIO {
     // paths survive upserts whose epochs were pure inserts or touched
     // other partitions/key ranges. Any uncertainty (missing stats,
     // unknown add version) reads as "attached" — decline, never guess.
-    // eqs and the view come from ONE snapshot read: segment pruning
-    // is skipped when refs are live (the whole point is judging the
-    // refs against every file they might attach to), kept for the
-    // common eq-free path
-    val eqs =
-      try snapshotEqs(dir, version, branch)
+    // eqs and the view come from ONE snapshot read, so the refs are
+    // judged against exactly the files they came with
+    val (v, eqs) =
+      try snapshotViewEq(dir, version, branch)
       catch { case scala.util.control.NonFatal(_) => return None }
     lazy val eqCols = columnRefs(tableSchema)
     def eqClean(files: Seq[Path],
@@ -3256,16 +3187,6 @@ object LakeTableIO {
                 parts: Map[String, Seq[String]]): Boolean =
       eqs.isEmpty || !files.exists(f => LakeEq.attachedTo(dir, eqs,
         f.getName, stats, parts, eqCols, tableSchema))
-    val v =
-      if (eqs.isEmpty) snapshotViewPruned(dir, version, branch, pushed)
-      else {
-        val (view, eqs2) = snapshotViewEq(dir, version, branch)
-        // the single-read refs are authoritative for the view THEY
-        // came with; a set that moved between the two reads above
-        // declines outright (never judge files against foreign refs)
-        if (eqs2 != eqs) return None
-        view
-      }
     if (pushed.isEmpty)
       return if (eqClean(v._1, v._3, v._4)) Some(v) else None
     val (files, dvs, stats, parts) = v
@@ -3845,125 +3766,6 @@ object LakeTableIO {
       }
     }
 
-  /** Running FULL-snapshot metadata view carried across consecutive
-    * CDC-replayed versions (r16, the r15 verdict's top_next). A
-    * ref-adding (upsert-epoch) version's delete side must consult
-    * every PRIOR file's stats — a full snapshot — and a year-long
-    * upsert stream replays tens of thousands of such versions, so
-    * re-materializing the snapshot per version is an O(epochs ×
-    * table-metadata) planning wall (the 4096-entry segment LRU stops
-    * absorbing it past ~4k segments). The carry pays that full read
-    * ONCE (seeded at the first version that needs it, or for free
-    * from the opening snapshot) and then advances per version by
-    * loading ONLY the segments that version created (diffed against
-    * the carried segment list — segments are immutable and content-
-    * addressed, so an unchanged name is an unchanged slice): an
-    * N-epoch replay reads O(table + new-segments-per-epoch) segments
-    * total instead of O(N × table). Counterized in LakeUpsertCdcSpec.
-    *
-    * Purely an optimization: callers drop the carry on any invariant
-    * break (non-consecutive version, advance failure) and reseed via
-    * [[LakeLog.snapshotAt]] — correctness never depends on it.
-    */
-  final class CdcCarry private (dir: String, branch: Option[String],
-      private var v: Long,
-      private var files: Seq[String],
-      private var stats: Map[String, LakeStats.FileStats],
-      private var parts: Map[String, Seq[String]],
-      private var segs: Set[String]) {
-
-    def version: Long = v
-
-    /** Advance the carried view to `nv` (must be `version + 1`): one
-      * manifest read plus only the segments absent from the carried
-      * list. Mirrors the commit's own construction: files =
-      * (files -- removed ++ added).distinct.sorted; per-file maps
-      * merge the fresh segments' entries over the carried ones (an
-      * amended file's rewritten segment is by definition fresh, so
-      * amendments land too) and subtract removed files.
-      */
-    def advance(nv: Long): Unit = {
-      require(nv == v + 1,
-        s"CdcCarry of $dir is at v$v, cannot advance to v$nv")
-      val known = segs
-      val delta = LakeLog.snapshotAtPruned(dir, nv, branch,
-        r => !known.contains(r.name))
-      if (delta.segments.isEmpty) {
-        // flat manifest: the read IS the complete view
-        files = delta.files; stats = delta.stats; parts = delta.parts
-      } else {
-        val removed = delta.removed.toSet
-        files = (files.filterNot(removed) ++ delta.added)
-          .distinct.sorted
-        stats = stats -- removed ++ delta.stats
-        parts = parts -- removed ++ delta.parts
-      }
-      segs = delta.segments.map(_.name).toSet
-      v = nv
-    }
-
-    /** The full-view snapshot at the carried version, shaped like
-      * [[LakeLog.snapshotAt]]: `skel`'s inline fields (added/removed/
-      * dvs/eqs/... are complete in every manifest read) with the
-      * carried complete files/stats/parts.
-      */
-    def fullAt(skel: LakeLog.Snapshot): LakeLog.Snapshot = {
-      require(skel.version == v,
-        s"CdcCarry of $dir is at v$v, asked for v${skel.version}")
-      skel.copy(files = files, stats = stats, parts = parts)
-    }
-  }
-
-  object CdcCarry {
-    def from(dir: String, branch: Option[String],
-             full: LakeLog.Snapshot): CdcCarry =
-      new CdcCarry(dir, branch, full.version, full.files, full.stats,
-        full.parts, full.segments.map(_.name).toSet)
-
-    /** The per-version resolution step both replay loops (the batch
-      * change feed and the CDC micro-batch stream) share. LAZY carry
-      * maintenance: versions that need no full view cost NOTHING (no
-      * manifest read, no segment diff — an append-only replay pays
-      * zero overhead); when a ref-adding version does need one, a live
-      * carry CATCHES UP by reading only the intervening versions'
-      * pruned manifests (each read once per replay, since the carry
-      * then rests at `v`), else it seeds from the one full read
-      * [[planCdcVersion]] would pay anyway. A carry from the future
-      * (re-planned old batch in stream recovery) is dropped — it
-      * cannot rewind; the reseed is the same full read as a cold
-      * start. Returns (carry to keep, full view iff `needsFull`).
-      */
-    def fullFor(carry: Option[CdcCarry], dir: String,
-                branch: Option[String], v: Long,
-                snap: LakeLog.Snapshot, isFull: Boolean,
-                needsFull: Boolean)
-        : (Option[CdcCarry], Option[LakeLog.Snapshot]) =
-      if (isFull) // snap IS the full view here — seed for free
-        (Some(from(dir, branch, snap)),
-          if (needsFull) Some(snap) else None)
-      else {
-        val live = carry.filter(_.version <= v)
-        if (!needsFull) (live, None)
-        else live match {
-          case Some(c) =>
-            try {
-              while (c.version < v) c.advance(c.version + 1)
-              (Some(c), Some(c.fullAt(snap)))
-            } catch { case scala.util.control.NonFatal(_) =>
-              // any advance failure (torn segment, unexpected log
-              // shape): the carry is disposable — reseed from the
-              // authoritative full read (on the SAME branch the
-              // carry advances with)
-              val full = LakeLog.snapshotAt(dir, v, branch)
-              (Some(from(dir, branch, full)), Some(full))
-            }
-          case None =>
-            val full = LakeLog.snapshotAt(dir, v, branch)
-            (Some(from(dir, branch, full)), Some(full))
-        }
-      }
-  }
-
   /** Spark requires a UNIFORM columnar answer across a batch's
     * partitions: when any CDC split is POSITIONAL (delete /
     * update_preimage / eq-emit reads — the row reader's page-selected
@@ -3987,8 +3789,7 @@ object LakeTableIO {
 
   def planCdcVersion(dir: String, snap: LakeLog.Snapshot,
                      cols: Array[LakeColumnRef], pushed: Array[Filter],
-                     initialSnapshot: Boolean,
-                     carriedFull: Option[LakeLog.Snapshot] = None)
+                     initialSnapshot: Boolean)
       : Array[InputPartition] = {
     def annotate(parts: Array[InputPartition],
                  info: LakeCdcInfo): Array[InputPartition] =
@@ -4006,9 +3807,8 @@ object LakeTableIO {
         specs, pushed)._1
     if (initialSnapshot) {
       // the opening snapshot's complete-state insert events subtract
-      // live equality deletes exactly like the batch scan (the caller
-      // passes the FULL snapshot here, so stats cover every file);
-      // unsequenceable vintages stay loud
+      // live equality deletes exactly like the batch scan; unsequenceable
+      // vintages stay loud
       LakeEq.requireSequenceable(dir, snap.eqs, snap.files, snap.stats)
       return attachEq(dir, annotate(planRowGroups(
         pruned(snap.files), cols, pushed,
@@ -4033,40 +3833,31 @@ object LakeTableIO {
             "replaces or deletion-vector changes — row events cannot " +
             "be derived; CALL system.rewrite_deletes and read across " +
             "the rewrite")
-      // FULL snapshot: the delete side consults every prior file's
-      // stats — served by the replay loop's carried view
-      // ([[CdcCarry.fullFor]]: catch-up reads only the intervening
-      // versions' new segments), with a direct snapshotAt fallback
-      // for carry-less callers (the price of a keyed delete that
-      // names no positions)
-      val full = carriedFull.getOrElse(
-        LakeLog.snapshotAt(dir, snap.version))
+      // the delete side consults every prior file's stats: `snap` is
+      // the version's complete manifest, so they are all at hand
       val schema = tableSchema(dir)
       val tcols = columnRefs(schema)
-      def prunedFull(files: Seq[String]): Seq[Path] =
-        LakePartitioning.prune(files.map(new Path(dir, _)), full.parts,
-          specs, pushed)._1
       val inserts: Seq[InputPartition] =
         if (snap.added.isEmpty) Seq.empty
-        else annotate(planRowGroups(prunedFull(snap.added), cols,
-          pushed, pruneGroups = true, Map.empty, full.stats).parts,
+        else annotate(planRowGroups(pruned(snap.added), cols,
+          pushed, pruneGroups = true, Map.empty, snap.stats).parts,
           LakeCdcInfo("insert", snap.version)).toSeq
       val addedSet = snap.added.toSet
-      val prior = full.files.filterNot(addedSet)
-      LakeEq.requireSequenceable(dir, ownRefs, prior, full.stats)
-      val earlier = full.eqs.filter(_.version < snap.version)
+      val prior = snap.files.filterNot(addedSet)
+      LakeEq.requireSequenceable(dir, ownRefs, prior, snap.stats)
+      val earlier = snap.eqs.filter(_.version < snap.version)
       def scoped(refs: Seq[LakeEq.EqRef], name: String) = {
-        val st = full.stats.get(name)
+        val st = snap.stats.get(name)
         LakeEq.scopedApplicable(dir, refs,
           st.map(_.addV).getOrElse(-1L), st, tcols, schema,
-          full.parts.get(name))
+          snap.parts.get(name))
       }
-      val candidates = prunedFull(prior)
+      val candidates = pruned(prior)
         .filter(p => scoped(ownRefs, p.getName).nonEmpty)
       val deletes: Seq[InputPartition] =
         if (candidates.isEmpty) Seq.empty
         else planRowGroups(candidates, cols, pushed,
-          pruneGroups = true, full.dvs, full.stats).parts.toSeq
+          pruneGroups = true, snap.dvs, snap.stats).parts.toSeq
           .map { p =>
             val lp = p.asInstanceOf[LakeInputPartition]
             val name = new Path(lp.path).getName

@@ -316,10 +316,9 @@ object LakeTx {
     val fs = fsFor(root)
     // per table: version -> txid for every retained txn-tagged manifest
     val TxnOp = """txn\(([0-9a-f-]+)\)""".r
-    // operations come from the lazily-extended ops hint: manifests are
-    // read as SKELETONS and only the versions the hint hasn't covered
-    // yet — a long-history table plans its cut without touching every
-    // manifest (or any segment)
+    // operations come from the lazily-extended ops hint: only the
+    // versions the hint hasn't covered yet are read — a long-history
+    // table plans its cut without touching every manifest
     val txnAt: Map[String, Seq[(Long, String)]] = dirs.map { d =>
       d -> LakeLog.operations(d).flatMap { case (v, op) =>
         op match {

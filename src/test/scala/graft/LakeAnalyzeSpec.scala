@@ -10,9 +10,7 @@ import graft.sources.dsv2.{GraftCatalog, LakeLog, LakeStats}
   * them (compaction rewrites, external bootstrap vintages), restoring
   * the metadata fast paths the strict all-files answerability rules
   * had conservatively declined. Soundness pins: DV'd files are
-  * skipped (live rows ≠ physical facts), amendments are idempotent,
-  * and manifest-tree segments holding amended files rewrite so reused
-  * segments can never serve stale facts.
+  * skipped (live rows ≠ physical facts) and amendments are idempotent.
   */
 class LakeAnalyzeSpec extends SparkSpec {
 
@@ -210,33 +208,6 @@ class LakeAnalyzeSpec extends SparkSpec {
         f => graft.sources.dsv2.LakeNdv.decode(
           head.stats(f).cols("t").ndv.get))).get
       assert(est == 200L, s"below-K exact: $est")
-    }
-  }
-
-  test("manifest-tree tables: amended files force their segments to " +
-       "rewrite — the amended facts are visible through the tree read") {
-    val prev = sys.props.get("graft.lake.manifest.inline.threshold")
-    sys.props("graft.lake.manifest.inline.threshold") = "4"
-    try withCatalog { (cat, root) =>
-      spark.sql(s"CREATE TABLE $cat.db.t (k BIGINT)")
-      // 8 single-file commits → tree mode at threshold 4
-      (0 until 8).foreach { i =>
-        spark.range(i * 100, (i + 1) * 100).selectExpr("id AS k")
-          .coalesce(1).createOrReplaceTempView(s"t_src$i")
-        spark.sql(s"INSERT INTO $cat.db.t SELECT * FROM t_src$i")
-      }
-      val dir = s"$root/db/t"
-      assert(LakeLog.current(dir).get.segments.nonEmpty, "tree mode")
-      spark.sql(s"CALL $cat.system.compact('db.t', 134217728)")
-      assert(!pushed(spark.sql(s"SELECT sum(k) FROM $cat.db.t")))
-      spark.sql(s"CALL $cat.system.analyze('db.t')")
-      val q = spark.sql(s"SELECT sum(k) FROM $cat.db.t")
-      assert(pushed(q), q.queryExecution.executedPlan)
-      assert(q.collect().head.getLong(0) == (0L until 800L).sum)
-    } finally prev match {
-      case Some(v) => sys.props("graft.lake.manifest.inline.threshold") = v
-      case None =>
-        sys.props.remove("graft.lake.manifest.inline.threshold")
     }
   }
 

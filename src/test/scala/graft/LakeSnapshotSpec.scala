@@ -305,4 +305,33 @@ class LakeSnapshotSpec extends SparkSpec {
       }
     }
   }
+
+  test("a manifest in the retired tree encoding (a segment list, no " +
+       "file list) fails loud, naming the manifest, instead of reading " +
+       "as an empty table") {
+    withCatalog { (cat, root) =>
+      spark.sql(s"CREATE TABLE $cat.db.old (k BIGINT)")
+      spark.sql(s"INSERT INTO $cat.db.old SELECT id FROM range(10)")
+      val dir = s"$root/db/old"
+      val v = LakeLog.current(dir).get.version + 1
+      // the shape the tree writer published past its file threshold
+      val manifest = new java.io.File(s"$dir/_log", f"v$v%020d.json")
+      Files.writeString(manifest.toPath,
+        s"""{"version":$v,"timestampMs":${System.currentTimeMillis()},""" +
+          """"operation":"append","added":[],"removed":[],"addedRows":0,""" +
+          """"dataChange":true,"segments":[{"name":"seg-0.json","n":1,""" +
+          """"lo":"a.parquet","hi":"a.parquet"}]}""")
+      def names(e: Throwable): Boolean =
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
+          Option(t.getMessage).exists(m =>
+            m.contains(manifest.getName) &&
+              m.contains("manifest-tree encoding") &&
+              m.contains("no longer read")))
+      val direct = intercept[IllegalStateException](LakeLog.snapshotAt(dir, v))
+      assert(names(direct), direct.getMessage)
+      val viaSql = intercept[Exception](
+        spark.sql(s"SELECT * FROM $cat.db.old").collect())
+      assert(names(viaSql), viaSql.toString)
+    }
+  }
 }

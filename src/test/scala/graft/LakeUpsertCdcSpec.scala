@@ -94,6 +94,49 @@ class LakeUpsertCdcSpec extends SparkSpec {
         .selectExpr("k", "v").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
       assert(got == Map(1L -> "a3", 2L -> "b2", 4L -> "d1", 5L -> "e3"))
+
+      // a longer history: 6 append commits, then 12 epochs each
+      // updating two keys — the events still fold to the table state,
+      // and the replay reads each version's manifest a small constant
+      // number of times: the full per-file stats a ref-adding version's
+      // delete side needs are in that version's own manifest
+      spark.sql(s"CREATE TABLE $cat.db.src12 " +
+        "(k BIGINT, v STRING, op STRING, seq BIGINT)")
+      (0 until 12).foreach(i => spark.sql(
+        s"INSERT INTO $cat.db.src12 VALUES " +
+          s"(${i % 8}, 'u$i', 'update', ${i + 2}), " +
+          s"(${(i + 3) % 8}, 'w$i', 'update', ${i + 2})"))
+      spark.sql(s"CREATE TABLE $cat.db.big " +
+        "(k BIGINT, v STRING, op STRING, seq BIGINT)")
+      (0 until 6).foreach(i => spark.sql(
+        s"INSERT INTO $cat.db.big " +
+          s"SELECT id % 8 AS k, concat('b', id) AS v, 'insert' " +
+          s"AS op, CAST(1 AS BIGINT) AS seq " +
+          s"FROM range(${i * 16}, ${(i + 1) * 16}, 1, 4)"))
+      runUpsert(cat, s"$cat.db.src12", s"$cat.db.big", freshDir("c7"))
+      val bigDir = s"$root/db/big"
+      val bigHead = LakeLog.current(bigDir).get
+      assert(bigHead.eqs.size == 12, s"12 epochs' refs: ${bigHead.eqs.size}")
+      val m0 = LakeLog.manifestReads.get()
+      val bigEvents = spark.sql(s"SELECT k, v, _change_type " +
+        s"FROM $cat.db.big.changes").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      val reads = LakeLog.manifestReads.get() - m0
+      val nVersions = LakeLog.versions(bigDir).size
+      assert(reads <= 2L * nVersions + 4,
+        s"replay of $nVersions versions read $reads manifests")
+      // per key: inserts minus deletes = live versions
+      val foldedLive = bigEvents.groupBy(_._1).map { case (k, es) =>
+        val ins = es.filter(_._3 == "insert").map(_._2)
+        val del = es.filter(_._3 == "delete").map(_._2)
+        k -> ins.diff(del).sorted.toSeq
+      }.filter(_._2.nonEmpty)
+      val state = spark.table(s"$cat.db.big")
+        .selectExpr("k", "v").collect()
+        .map(r => r.getLong(0) -> r.getString(1))
+        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+      assert(foldedLive == state,
+        s"fold/state divergence: $foldedLive vs $state")
     }
   }
 
@@ -367,93 +410,6 @@ class LakeUpsertCdcSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       assert(events2.sorted.toSeq ==
         (expectInserts ++ expectDeletes).sorted, s"${events2.toSeq}")
-    }
-  }
-
-  test("O(candidates) CDC replay across epoch history (r16): an " +
-       "N-epoch batch replay on a tree table reads each manifest " +
-       "segment O(1) times — the carried view seeds once at the " +
-       "first ref-adding version and advances by the NEW segments " +
-       "per version, instead of re-materializing the full snapshot " +
-       "per epoch (counterized with the segment cache shrunk to " +
-       "model the 100 TB regime, where segments outnumber the LRU)") {
-    withCatalog { (cat, root) =>
-      val prevT = sys.props.get("graft.lake.manifest.inline.threshold")
-      val prevC = sys.props.get("graft.lake.segcache.max")
-      sys.props("graft.lake.manifest.inline.threshold") = "2"
-      try {
-        spark.sql(s"CREATE TABLE $cat.db.src " +
-          "(k BIGINT, v STRING, op STRING, seq BIGINT)")
-        // 12 epochs, each updating two keys
-        (0 until 12).foreach(i => spark.sql(
-          s"INSERT INTO $cat.db.src VALUES " +
-            s"(${i % 8}, 'u$i', 'update', ${i + 2}), " +
-            s"(${(i + 3) % 8}, 'w$i', 'update', ${i + 2})"))
-        spark.sql(s"CREATE TABLE $cat.db.big " +
-          "(k BIGINT, v STRING, op STRING, seq BIGINT)")
-        // base history: 6 append commits × 4 files → a manifest tree
-        (0 until 6).foreach(i => spark.sql(
-          s"INSERT INTO $cat.db.big " +
-            s"SELECT id % 8 AS k, concat('b', id) AS v, 'insert' " +
-            s"AS op, CAST(1 AS BIGINT) AS seq " +
-            s"FROM range(${i * 16}, ${(i + 1) * 16}, 1, 4)"))
-        val dir = s"$root/db/big"
-        val baseSegs = LakeLog.current(dir).get.segments.size
-        assert(baseSegs >= 6, s"tree fixture expected: $baseSegs segs")
-        runUpsert(cat, s"$cat.db.src", s"$cat.db.big", freshDir("c7"))
-        val head = LakeLog.current(dir).get
-        assert(head.eqs.size == 12, s"12 epochs' refs: ${head.eqs.size}")
-        val headSegs = head.segments.size
-        // the 100 TB regime: every repeated segment load is a real
-        // read (the production LRU can't span the table)
-        sys.props("graft.lake.segcache.max") = "1"
-        LakeLog.clearSegmentCache()
-        val s0 = LakeLog.segmentReads.get()
-        val events = spark.sql(s"SELECT k, v, _change_type " +
-          s"FROM $cat.db.big.changes").collect()
-        val reads = LakeLog.segmentReads.get() - s0
-        // pre-r16 shape: each of the 12 epoch versions re-reads the
-        // full snapshot — at least epochs × baseSegs segment loads.
-        // With the carry: one full seed (~headSegs) plus O(new
-        // segments) per version, each counted a small-constant number
-        // of times (the delta read and the carry advance both touch a
-        // version's fresh segments; the cap-1 cache no longer dedupes
-        // them). The bound is the scaling claim, with slack for the
-        // constants — far under the old epochs × table regime.
-        assert(reads < 12L * baseSegs,
-          s"replay read $reads segments — the old O(epochs × table) " +
-            s"regime (bound ${12L * baseSegs})")
-        assert(reads <= 4L * headSegs + 24,
-          s"replay read $reads segments; carried-view bound is " +
-            s"4×$headSegs+24")
-        // and the events themselves are exact: fold equals state
-        val folded = events
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-          .groupBy(_._1).map { case (k, es) => k -> es }
-        val state = spark.table(s"$cat.db.big")
-          .selectExpr("k", "v").collect()
-          .map(r => r.getLong(0) -> r.getString(1))
-          .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-        // per key: inserts minus deletes = live versions
-        val foldedLive = folded.map { case (k, es) =>
-          val ins = es.filter(_._3 == "insert").map(_._2)
-          val del = es.filter(_._3 == "delete").map(_._2)
-          k -> ins.diff(del).sorted.toSeq
-        }.filter(_._2.nonEmpty)
-        assert(foldedLive == state,
-          s"fold/state divergence: $foldedLive vs $state")
-      } finally {
-        prevT match {
-          case Some(v) =>
-            sys.props("graft.lake.manifest.inline.threshold") = v
-          case None =>
-            sys.props.remove("graft.lake.manifest.inline.threshold")
-        }
-        prevC match {
-          case Some(v) => sys.props("graft.lake.segcache.max") = v
-          case None    => sys.props.remove("graft.lake.segcache.max")
-        }
-      }
     }
   }
 }

@@ -15,8 +15,9 @@ import graft.sources.LakeIngest
   * `VIC<yymmdd>_ABR_Agency_Data.txt` files → full run → assert lake
   * layout, single-file delta CSV names + contents, hook execution,
   * cleanup, the delta's partition pruning; plus the kill-switch abort
-  * path, the not-enough-partitions log-and-continue path and a failed
-  * ingest that leaves no job running.
+  * path, the not-enough-partitions log-and-continue path, a failed
+  * ingest that leaves no job running and the run log a failed run
+  * still persists.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -146,6 +147,28 @@ class PipelineSpec extends SparkSpec {
     dropAgencyTable()
   }
 
+  test("a failed run still persists its log, ending with an event that " +
+       "names the exception; the exception itself propagates unchanged") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    write(staging, "VIC240115_ABR_Agency_Data.txt", Seq(row("p1")))
+    val boom = new IllegalStateException("hook exploded")
+    val cfg = Pipeline.Config(staging.toString, lake.toString,
+      runId = Some("failed"),
+      hooks = Map("Agency_Data" -> Seq((_, _, _, log) => {
+        log("hook started"); throw boom
+      })))
+    val thrown = intercept[IllegalStateException](Pipeline.run(spark, cfg))
+    assert(thrown eq boom)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val lines = Files.readAllLines(lake.resolve("LOGS/failed.jsonl")).asScala
+    val messages = lines.map(l => mapper.readTree(l).get("message").asText())
+    assert(messages.contains("hook started"), messages)
+    assert(messages.last.contains("java.lang.IllegalStateException") &&
+      messages.last.contains("hook exploded"), messages.last)
+    dropAgencyTable()
+  }
+
   test("two datasets in one run: Businessname flows through the same " +
        "staging -> classify -> lake -> table path via Config.schemas, " +
        "with its own (pluggable) hook and no delta") {
@@ -237,10 +260,14 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(lake)
     Files.writeString(lake.resolve("disabled"), "disabled")
 
-    val cfg = Pipeline.Config(staging.toString, lake.toString)
+    val cfg = Pipeline.Config(staging.toString, lake.toString,
+      runId = Some("killed"))
     intercept[Pipeline.DisabledException](Pipeline.run(spark, cfg))
     assert(!Files.exists(lake.resolve("DATA")), "nothing may be loaded")
     assert(Files.exists(staging.resolve("VIC240115_ABR_Agency_Data.txt")))
+    // the aborted run still persists its log
+    val killedLog = Files.readString(lake.resolve("LOGS/killed.jsonl"))
+    assert(killedLog.contains("ETL Disabled"), killedLog)
 
     // a flag with other content is ignored (reference compares the body)
     Files.writeString(lake.resolve("disabled"), "enabled")

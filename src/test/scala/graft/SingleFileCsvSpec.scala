@@ -184,15 +184,22 @@ class SingleFileCsvSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         seen.put(name -> qe)
     }
     spark.listenerManager.register(listener)
+    def marks(e: (String, QueryExecution), name: String): Boolean =
+      e._2.analyzed.output.exists(_.name == name)
     try {
+      // listener events arrive in order, and an earlier test's
+      // executions can still be queued when the listener registers:
+      // only the events between the start and end markers are this
+      // write's
+      spark.range(1).toDF("start_marker").collect()
       sink(spark.range(0, 1000, 1, 4).groupBy(col("id") % 7).count(),
         header = true, ",")
-      // listener events arrive in order: once the marker is seen, every
-      // execution of the write has been reported
       spark.range(1).toDF("marker").collect()
       val events = Iterator.continually(
         seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile(e => e != null && !e._2.analyzed.output.exists(_.name == "marker"))
+        .takeWhile(_ != null)
+        .dropWhile(e => !marks(e, "start_marker")).drop(1)
+        .takeWhile(e => !marks(e, "marker"))
         .toSeq
       assert(events.size == 1, s"executions: ${events.map(_._1)}")
       assert(find(events.head._2.executedPlan)(
