@@ -4,7 +4,8 @@
 Usage (from inside the repository):
 
     scripts/bench_pairs.py --base HEAD~1 --change HEAD \
-        --workload lake_queries --seeds 1-10 [--seconds 10] [--keep DIR]
+        --workload lake_queries --seeds 1-10 [--seconds 10] [--keep DIR] \
+        [--json FILE]
 
 Each revision is exported with `git archive` into its own temporary
 directory, so neither the working tree nor `abrbench/` is touched. For
@@ -24,6 +25,11 @@ change's median is worse than the base's by more than the bound,
 `unresolved` when the base's IQR/median exceeds the bound (the runs
 spread too widely to tell), `ok` otherwise. Also prints each side's
 failed operation counts. Exits non-zero if a run fails.
+
+With `--json FILE`, also records every run (seed, side, order within its
+pair, end-to-end metrics, failed operations) and the printed summary
+under `workloads.<workload>` in FILE, keeping the other workloads
+already recorded there.
 """
 import argparse
 import json
@@ -76,6 +82,7 @@ def main():
     ap.add_argument("--seeds", default="1-10", help="e.g. 1-10 or 7")
     ap.add_argument("--seconds", type=int, default=10)
     ap.add_argument("--keep", help="export into this directory and keep it")
+    ap.add_argument("--json", help="record every run and the summary here")
     a = ap.parse_args()
 
     root = a.keep or tempfile.mkdtemp(prefix="bench_pairs_")
@@ -88,11 +95,16 @@ def main():
             metrics = {m["name"]: (m["better"], m["bound"])
                        for m in json.load(f)["end_to_end"]}
         results = {"base": [], "change": []}
+        runs = []
         for i, seed in enumerate(seeds(a.seeds)):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
-            for side in order:
+            for pos, side in enumerate(order, 1):
                 r = run(trees[side], a.workload, seed, a.seconds)
                 results[side].append(r)
+                runs.append({"seed": seed, "side": side, "order": pos,
+                             "metrics": {k: r["metrics"][k]["value"]
+                                         for k in metrics},
+                             "failed": r["failed"]})
                 print(f"seed {seed} {side}: " + json.dumps(
                     {k: v["value"] for k, v in r["metrics"].items()}),
                     file=sys.stderr, flush=True)
@@ -101,9 +113,10 @@ def main():
             shutil.rmtree(root, ignore_errors=True)
 
     n = len(results["base"])
-    print(f"{a.workload}: {n} pairs, base {a.base}, change {a.change}")
-    print(f"{'metric':28} {'base q1/med/q3':>30} {'change q1/med/q3':>30}"
-          f" {'d_med':>8} {'wins':>6} gain gate")
+    summary = [
+        f"{a.workload}: {n} pairs, base {a.base}, change {a.change}",
+        f"{'metric':28} {'base q1/med/q3':>30} {'change q1/med/q3':>30}"
+        f" {'d_med':>8} {'wins':>6} gain gate"]
     for name, (direction, bound) in metrics.items():
         b = [r["metrics"][name]["value"] for r in results["base"]]
         c = [r["metrics"][name]["value"] for r in results["change"]]
@@ -115,13 +128,36 @@ def main():
         spread = (bq[2] - bq[0]) / bq[1] if bq[1] else 0.0
         gate = [label for label, hit in (("regressed", -sign * rel > bound),
                                          ("unresolved", spread > bound)) if hit]
-        print(f"{name:28} {'%.4g / %.4g / %.4g' % bq:>30} "
-              f"{'%.4g / %.4g / %.4g' % cq:>30} {rel:+8.1%} {wins:>3}/{n}"
-              f" {'yes ' if gain else 'no  '} {','.join(gate) or 'ok'}")
+        summary.append(
+            f"{name:28} {'%.4g / %.4g / %.4g' % bq:>30} "
+            f"{'%.4g / %.4g / %.4g' % cq:>30} {rel:+8.1%} {wins:>3}/{n}"
+            f" {'yes ' if gain else 'no  '} {','.join(gate) or 'ok'}")
     for side in ("base", "change"):
         failed = [r["failed"] for r in results[side]]
-        print(f"{side} failed per run: {failed}")
+        summary.append(f"{side} failed per run: {failed}")
+    print("\n".join(summary))
+    if a.json:
+        record(a, runs, summary)
 
+
+def record(a, runs, summary):
+    """Merge this workload's runs and summary into the JSON file."""
+    doc = {"workloads": {}}
+    if os.path.exists(a.json):
+        with open(a.json) as f:
+            doc = json.load(f)
+    cores = os.cpu_count()
+    with open("/proc/meminfo") as f:
+        kib = int(next(l for l in f if l.startswith("MemTotal:")).split()[1])
+    doc["host"] = f"{cores}-core, {kib / 2**20:.0f} GiB"
+    doc["command"] = (f"scripts/bench_pairs.py --base {a.base} --change "
+                      f"{a.change} --workload <w> --seeds <s> --seconds "
+                      f"{a.seconds} ({a.seconds} s runs, alternating order)")
+    doc["workloads"][a.workload] = {"seeds": a.seeds, "runs": runs,
+                                    "summary": summary}
+    with open(a.json, "w") as f:
+        json.dump(doc, f, indent=1)
+        f.write("\n")
 
 if __name__ == "__main__":
     main()

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Snapshot-diff ("delta") operators — the analytical core of the reference
   * pipeline (reference: agency-delta.go:126-246). Given two full snapshots of
@@ -61,7 +62,7 @@ object SnapshotDelta {
   }
 
   /** Per-row xxhash64 over the compared attrs — the unchanged-row fast
-    * path of [[updated]] and the narrow join of [[updatedNarrow]]. Each
+    * path of [[updated]] and the steering join of [[deltas]]. Each
     * column is hashed as an (IS NULL, value) pair: Spark's hash fold
     * SKIPS null fields (the running hash passes through), so without
     * the marker, rows differing only in which column holds a NULL —
@@ -99,63 +100,103 @@ object SnapshotDelta {
       .select(newest.columns.toIndexedSeq.map(c => col(s"n.$c")): _*)
   }
 
-  /** [[updated]] with the wide-row shuffle factored OUT — the default
-    * plan for UNBUCKETED snapshots at scale. The plain formulation
-    * shuffles every compared column of BOTH sides through the join
-    * (at 10× fixture scale: two ~750 MB full-width exchanges plus
-    * ~1.1 GB of sort spill — the measured 73 s sort/spill cliff in
-    * SCALING.md sweep H); this one joins only `(key, rowhash)` first —
-    * a few dozen bytes per row — to find the CHANGED key set, then
-    * semi-joins each wide side down to exactly those keys before
-    * [[updated]] runs on what remains. Weekly change rates are
-    * single-digit percent, so the wide join's inputs shrink by ~20-100×
-    * and AQE turns its exchange into a broadcast when the changed set
-    * fits. Each side is scanned twice, but a parquet scan is sequential
-    * map-side work — trading it for the full-width exchange+sort is the
-    * right exchange at any scale. Result rows and column order are
-    * IDENTICAL to [[updated]] (the pair filter and change predicate
-    * re-run on the rejoined pairs, so multiplicity under duplicate keys
-    * and Legacy's three-valued semantics are preserved bit-for-bit).
-    * Bucketed snapshots should keep [[updated]]: their join has NO
-    * exchange to factor out, and the extra semi-joins would only add
-    * work.
+  /** The two weekly deltas from one steering pass, and how they were
+    * planned. `narrow` is false when the steering pass found more keys
+    * than its budget and the plain plans were returned. The key counts
+    * are exact on the narrow path; on the wide path they are counted
+    * among the first `budget + 1` keys found, so they are lower bounds.
+    */
+  final case class Deltas(updated: DataFrame, added: DataFrame,
+                          narrow: Boolean, changedKeys: Long,
+                          addedKeys: Long)
+
+  /** UPDATED and ADDED, steered by one classifying pass instead of one
+    * plan per output. The plain formulations shuffle every compared
+    * column of both sides through [[updated]]'s join (at 10x fixture
+    * scale: two ~750 MB full-width exchanges plus ~1.1 GB of sort spill,
+    * the 73 s cliff in SCALING.md sweep H), and [[added]] reads
+    * `previous` once more for its anti-join.
     *
-    * The changed keys are collected to the driver when this is called
-    * — at most `budget + 1` of them, the budget being the session's
-    * `autoBroadcastJoinThreshold` at a conservative 64 bytes/key — and
-    * the returned plan carries them as a local relation, so nothing is
-    * cached and nothing needs releasing. Past the budget (bulk re-key,
-    * full refresh: the set grows with the table, and broadcasting it
-    * would OOM the driver) this returns [[updated]]'s plain wide join,
-    * which is exactly the right plan when most rows changed (the
-    * semi-joins would filter nothing).
+    * The steering pass joins `newest(key, rowhash)` LEFT OUTER to
+    * `previous(key, rowhash)` (a few dozen bytes per row cross the
+    * shuffle) and classifies each newest key as ''changed'' (a matched
+    * pair's hashes differ) or ''added'' (no match). A key is never both:
+    * every row of a key present in `previous` finds a match. NULL keys
+    * match nothing, so a NULL-key row of `newest` is added, as under
+    * [[added]]'s anti-join. The keys of both kinds are collected to the
+    * driver when this is called, at most `budget + 1` of them, the
+    * budget being the session's `autoBroadcastJoinThreshold` at a
+    * conservative 64 bytes per key. The returned plans carry them as
+    * broadcast local relations, so nothing is cached and nothing needs
+    * releasing.
+    *
+    *  - UPDATED: both sides are semi-joined to the changed keys, and the
+    *    cut `previous` side is broadcast to the final pair join, so no
+    *    wide row crosses a shuffle. The broadcast holds `previous`'s rows
+    *    of at most `budget` keys (times their duplicates): at the default
+    *    10 MiB threshold, 163,840 keys of a ~300-byte Agency_Data row are
+    *    ~49 MB in the driver and in each executor. The pair filter and
+    *    the change predicate re-run on the rejoined pairs, so rows,
+    *    multiplicity under duplicate keys, Legacy's three-valued
+    *    semantics and column order are those of [[updated]]; rows come
+    *    in `newest`'s scan order.
+    *  - ADDED: `newest` semi-joined, null-safe, to the added keys;
+    *    `previous` is not read again.
+    *
+    * Past the budget (bulk re-key, full refresh: the key lists grow with
+    * the table, and broadcasting them would exhaust the driver) this
+    * returns [[updated]]'s plain wide join and [[added]]'s anti-join,
+    * which are the right plans when most rows changed. Bucketed
+    * snapshots should keep [[updated]]: their join has no exchange to
+    * factor out.
+    */
+  def deltas(newest: DataFrame, previous: DataFrame, key: String,
+             attrs: Seq[String], mode: ChangeMode = Legacy): Deltas = {
+    // the narrow join: key + 8-byte hash per side, nothing else crosses
+    // the wire. It is HINTED a sort-merge join: a broadcast of the
+    // previous side would finish that side's scan before the newest
+    // side's could start, while a shuffle join runs both scans at once.
+    // Distinct because a key with several rows must appear once in the
+    // steering lists; the join's key partitioning already serves it.
+    val h = rowHash(attrs)
+    val steering = newest.select(col(key).as("ck"), h.as("nh"))
+      .join(previous.select(col(key).as("pk"), h.as("ph")).hint("merge"),
+        col("ck") === col("pk"), "left_outer")
+      .where(col("pk").isNull || col("nh") =!= col("ph"))
+      .select(col("ck"), col("pk").isNull.as("added"))
+      .distinct()
+    val t = newest.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val budget = if (t <= 0) 160000L else math.max(1L, t / 64L)
+    val keys = steering.limit(math.min(budget + 1, Int.MaxValue).toInt)
+      .collect()
+    val (fresh, changed) = keys.partition(_.getBoolean(1))
+    if (keys.length > budget)
+      return Deltas(updated(newest, previous, key, attrs, mode),
+        added(newest, previous, key), narrow = false,
+        changed.length, fresh.length)
+    // the key lists are HINTED broadcast, and so is the cut previous
+    // side: size estimation cannot see that the semi-joined sides are
+    // change-rate sized, so an unhinted plan may shuffle them in full
+    // (the budget above has proven the lists fit)
+    def semi(df: DataFrame, ks: Array[Row]): DataFrame = {
+      val list = broadcast(newest.sparkSession.createDataFrame(
+        java.util.Arrays.asList(ks.map(r => Row(r.get(0))): _*),
+        StructType(steering.schema.take(1))))
+      df.join(list, df(key) <=> list("ck"), "left_semi")
+    }
+    Deltas(
+      updated(semi(newest, changed), broadcast(semi(previous, changed)),
+        key, attrs, mode),
+      semi(newest, fresh), narrow = true, changed.length, fresh.length)
+  }
+
+  /** [[deltas]]' UPDATED: the changed-key steered [[updated]], or its
+    * plain wide join past the key budget.
     */
   def updatedNarrow(newest: DataFrame, previous: DataFrame, key: String,
                     attrs: Seq[String],
-                    mode: ChangeMode = Legacy): DataFrame = {
-    // the narrow join — key + 8-byte hash per side, nothing else
-    // crosses the wire; distinct because a key with several differing
-    // pairs must appear once in the steering list
-    val h = rowHash(attrs)
-    val changed = newest.select(col(key).as("ck"), h.as("nh"))
-      .join(previous.select(col(key).as("ck"), h.as("ph")), "ck")
-      .where(col("nh") =!= col("ph"))
-      .select(col("ck")).distinct()
-    val t = newest.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val budget = if (t <= 0) 160000L else math.max(1L, t / 64L)
-    val keys = changed.limit(math.min(budget + 1, Int.MaxValue).toInt)
-      .collect()
-    if (keys.length > budget) return updated(newest, previous, key, attrs, mode)
-    // the semi build side is HINTED broadcast: size estimation cannot
-    // see that the semi-joined sides are change-rate sized, so an
-    // unhinted plan may shuffle each wide side in full; the hint keeps
-    // them exchange-free (the budget above has proven the list fits)
-    val steer = broadcast(newest.sparkSession.createDataFrame(
-      java.util.Arrays.asList(keys: _*), changed.schema))
-    def semi(df: DataFrame): DataFrame =
-      df.join(steer, df(key) === steer("ck"), "left_semi")
-    updated(semi(newest), semi(previous), key, attrs, mode)
-  }
+                    mode: ChangeMode = Legacy): DataFrame =
+    deltas(newest, previous, key, attrs, mode).updated
 
   /** Rows whose key appears only in the newest snapshot — the documented
     * intent of the reference "new" query (Readme.md:13, "record didn't

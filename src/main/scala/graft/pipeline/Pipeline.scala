@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotDelta
@@ -188,22 +192,32 @@ object AgencyDeltaStage {
     val n = snapshot(newest)
     val p = snapshot(previous)
 
-    log("Running Delta Query (Change)")
-    // narrow-shuffle formulation: unbucketed snapshots, so the changed
-    // keys steer the wide join instead of shuffling 34 columns per side
-    val updPath = SingleFileCsv.write(
-      SnapshotDelta.updatedNarrow(
-        n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey)),
-      s"${cfg.lakeRoot}/DELTA/UPDATED/$dataset/importdate=$newest",
-      s"${dataset}_updated.csv")
-    log(s"Delta written: $updPath")
+    // one steering pass classifies the changed and added keys; both
+    // outputs are planned from it (see SnapshotDelta.deltas)
+    val d = SnapshotDelta.deltas(
+      n, p, AbrSchemas.agencyKey, cols.filter(_ != AbrSchemas.agencyKey))
+    val bound = if (d.narrow) "" else ">= "
+    log(s"Delta path: ${if (d.narrow) "narrow" else "wide"}, " +
+      s"changed keys $bound${d.changedKeys}, added keys $bound${d.addedKeys}")
 
+    // UPDATED and ADDED are independent once the key lists are on the
+    // driver, so the two writes run at once (ADDED on a thread of its
+    // own, which inherits this one's Spark properties); both are waited
+    // for before a failure, UPDATED's first, is rethrown
+    def write(df: DataFrame, kind: String): String = SingleFileCsv.write(df,
+      s"${cfg.lakeRoot}/DELTA/${kind.toUpperCase}/$dataset/importdate=$newest",
+      s"${dataset}_$kind.csv")
+    log("Running Delta Query (Change)")
     log("Running Delta Query (New)")
-    val added = SnapshotDelta.added(n, p, AbrSchemas.agencyKey)
-    val addPath = SingleFileCsv.write(
-      added,
-      s"${cfg.lakeRoot}/DELTA/ADDED/$dataset/importdate=$newest",
-      s"${dataset}_added.csv")
+    val addedWrite = new FutureTask[String](() => write(d.added, "added"))
+    new Thread(addedWrite, s"$dataset-added-delta").start()
+    val updPath = Try(write(d.updated, "updated"))
+    val addPath =
+      try addedWrite.get()
+      catch {
+        case e: ExecutionException => throw updPath.failed.getOrElse(e.getCause)
+      }
+    log(s"Delta written: ${updPath.get}")
     log(s"Delta written: $addPath")
   }
 }

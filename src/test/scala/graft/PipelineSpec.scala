@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, LinkedBlockingQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,20 +14,14 @@ import graft.sources.LakeIngest
 /** End-to-end pipeline test (SURVEY §5.4): a staging dir of synthetic
   * `VIC<yymmdd>_ABR_Agency_Data.txt` files → full run → assert lake
   * layout, single-file delta CSV names + contents, hook execution,
-  * cleanup, the delta's partition pruning; plus the kill-switch abort
-  * path, the not-enough-partitions log-and-continue path, a failed
-  * ingest that leaves no job running and the run log a failed run
-  * still persists.
+  * cleanup, the delta's partition pruning, its logged path and its
+  * Spark jobs and scans; plus the kill-switch abort path, the
+  * not-enough-partitions log-and-continue path, a failed ingest that
+  * leaves no job running and the run log a failed run still persists.
   */
 class PipelineSpec extends SparkSpec {
 
-  /** A 34-column pipe-delimited Agency_Data row: pid + 33 attrs, where
-    * attr values default to "v<i>" and can be overridden per column name.
-    */
-  private def row(pid: String, over: Map[String, String] = Map.empty): String =
-    (pid +: AbrSchemas.agencyCompareAttrs.zipWithIndex.map { case (c, i) =>
-      over.getOrElse(c, s"v$i")
-    }).mkString("|")
+  import AgencyWeeks.row
 
   private def freshDirs(): (Path, Path) = {
     val base = Files.createTempDirectory("graft-pipe")
@@ -70,6 +64,9 @@ class PipelineSpec extends SparkSpec {
     val logLines = Files.readAllLines(logFile).asScala
     assert(logLines.head.contains("\"seq\":0"))
     assert(logLines.exists(_.contains("Running Delta Query (Change)")))
+    // the steering pass reports its path and key counts
+    assert(log.events.contains(
+      "Delta path: narrow, changed keys 1, added keys 1"), log.events)
 
     assert(loaded.map(_.importdate).sorted == Seq("2024-01-08", "2024-01-15"))
     // lake layout (reference load.go:19-21), gzip files inside
@@ -306,11 +303,11 @@ class PipelineSpec extends SparkSpec {
       hooks = Map("Agency_Data" -> Seq(delta))))
     assert(Files.exists(lake.resolve(
       "DELTA/UPDATED/Agency_Data/importdate=2024-01-15/Agency_Data_updated.csv")))
-    // updated: the steering collect and the final query scan both
-    // snapshots; added scans both once more
+    // the steering collect and UPDATED scan both snapshots; ADDED scans
+    // newest once more
     val ss = executions.flatMap(qe => allNodes(qe.executedPlan))
       .collect { case s: FileSourceScanExec => s }
-    assert(ss.size >= 6, s"expected every delta scan, saw ${ss.size}")
+    assert(ss.size == 5, s"expected every delta scan, saw ${ss.size}")
     ss.foreach { scan =>
       val pf = scan.metadata.getOrElse("PartitionFilters", "")
       assert(pf.contains("importdate"),
@@ -319,6 +316,89 @@ class PipelineSpec extends SparkSpec {
       assert(selected.contains(1L),
         s"each side must list exactly its own partition, got $selected")
     }
+    dropAgencyTable()
+  }
+
+  test("a week past the steering budget logs the wide path and writes " +
+       "the same deltas") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    write(staging, "VIC240108_ABR_Agency_Data.txt",
+      Seq(row("p1"), row("p2"), row("p3")))
+    write(staging, "VIC240115_ABR_Agency_Data.txt",
+      Seq(row("p1"), row("p2", Map("org_nm" -> "CHANGED")), row("p4")))
+    val log = new Pipeline.RunLog()
+    // a budget of one key: one changed and one added key exceed it
+    withBroadcastThreshold(64) {
+      Pipeline.run(spark, Pipeline.Config(staging.toString, lake.toString),
+        log)
+    }
+    assert(log.events.contains(
+      "Delta path: wide, changed keys >= 1, added keys >= 1"), log.events)
+    for ((kind, pid) <- Seq("UPDATED" -> "p2", "ADDED" -> "p4")) {
+      val lines = Files.readAllLines(lake.resolve(s"DELTA/$kind/Agency_Data/" +
+        s"importdate=2024-01-15/Agency_Data_${kind.toLowerCase}.csv")).asScala
+      assert(lines.tail.map(_.takeWhile(_ != ',')) == Seq(pid), kind)
+    }
+    dropAgencyTable()
+  }
+
+  test("the delta stage's Spark work on a benchmark-shaped week: one " +
+       "steering pass, previous scanned twice, newest three times") {
+    dropAgencyTable()
+    val (staging, lake) = freshDirs()
+    val weeks = AgencyWeeks.pair(8000)
+    AgencyWeeks.stage(staging, weeks)
+    val jobs = new LinkedBlockingQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.put(e)
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    def marks(e: SparkListenerJobStart, name: String): Boolean =
+      Option(e.properties).exists(p =>
+        p.getProperty("spark.job.description") == name)
+    var executions = Seq.empty[QueryExecution]
+    val log = new Pipeline.RunLog()
+    val delta: (SparkSession, Pipeline.Config, String, Pipeline.RunLog) => Unit =
+      (s, c, ds, l) => executions = executionsOf {
+        marker("start_marker")
+        AgencyDeltaStage.run(s, c, ds, l)
+        marker("marker")
+      }._2
+    spark.sparkContext.addSparkListener(listener)
+    val counted = try {
+      // the benchmark's threshold for its 8,000-row weeks
+      withBroadcastThreshold(163840) {
+        Pipeline.run(spark, Pipeline.Config(staging.toString, lake.toString,
+          hooks = Map("Agency_Data" -> Seq(delta))), log)
+      }
+      Iterator.continually(jobs.poll(60, TimeUnit.SECONDS))
+        .takeWhile(_ != null)
+        .dropWhile(e => !marks(e, "start_marker")).drop(1)
+        .takeWhile(e => !marks(e, "marker"))
+        .toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(log.events.contains(s"Delta path: narrow, changed keys " +
+      s"${weeks.changed}, added keys ${weeks.added}"), log.events)
+    // the steering collect (two narrow map stages and the collect), the
+    // UPDATED write (the changed-key list's broadcast, the cut previous
+    // side's broadcast and the write) and the ADDED write (the added-key
+    // list's broadcast and the write)
+    assert(counted.size == 8, s"${counted.size} jobs: " +
+      counted.map(_.properties.getProperty("spark.rdd.scope")).mkString("; "))
+    val scans = executions.flatMap(qe => allNodes(qe.executedPlan))
+      .collect { case s: FileSourceScanExec => s }
+    def scansOf(d: String) = scans.filter(
+      _.metadata.getOrElse("PartitionFilters", "").contains(d))
+    assert(scansOf("2024-01-08").size == 2, "previous: steering and UPDATED")
+    assert(scansOf("2024-01-15").size == 3,
+      "newest: steering, UPDATED and ADDED")
+    val scanned = scans.map(_.metrics("numOutputRows").value).sum
+    assert(scanned == 2 * weeks.previous.size + 3 * weeks.newest.size)
     dropAgencyTable()
   }
 

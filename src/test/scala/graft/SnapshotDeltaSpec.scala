@@ -1,9 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 import graft.operators.SnapshotDelta
 import graft.operators.SnapshotDelta.{Legacy, NullSafe}
+import graft.pipeline.AbrSchemas
+import graft.sources.{LakeIngest, SingleFileCsv}
 
 /** Unit coverage of the delta core (SURVEY §5.2): the change-predicate
   * NULL matrix, a fixture with known added/removed/updated rows, and
@@ -84,24 +89,15 @@ class SnapshotDeltaSpec extends SparkSpec {
     }
   }
 
-  /** `body` with `autoBroadcastJoinThreshold` set to `bytes`, so that
-    * updatedNarrow's changed-key budget is `bytes / 64`.
-    */
-  private def withBroadcastThreshold[A](bytes: Long)(body: => A): A = {
-    val k = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k, bytes.toString)
-    try body finally saved match {
-      case Some(v) => spark.conf.set(k, v)
-      case None    => spark.conf.unset(k)
-    }
-  }
+  /** A sorted row multiset. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("updatedNarrow plan pin: no shuffle exchange ever carries the " +
        "wide columns — only (key, hash) projections cross the wire; the " +
        "wide sides reach the final join semi-joined and AQE-broadcast") {
     import org.apache.spark.sql.execution.LocalTableScanExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
     // a genuinely wide shape: 20 compared columns
     val cols = (1 to 20).map(i => s"c$i")
     def wide(seed: Int): DataFrame = {
@@ -172,6 +168,120 @@ class SnapshotDeltaSpec extends SparkSpec {
         if (narrow) assert(joins >= 3, s"narrow path expected, saw $joins joins")
         else assert(joins == 1,
           s"guard must route to updated's single wide join, saw $joins joins")
+      }
+  }
+
+  /** A two-week Agency_Data lake written by `LakeIngest` from CSV
+    * staging files and registered as `table`: (newest, previous).
+    */
+  private def fileLake(table: String,
+                       weeks: AgencyWeeks.Pair): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val base = Files.createTempDirectory("graft-delta-lake")
+    val staging = Files.createDirectory(base.resolve("staging"))
+    val lake = base.resolve("lake").toString
+    AgencyWeeks.stage(staging, weeks)
+    val cols = AbrSchemas.agencyColumns
+    LakeIngest.ingest(spark, staging.toString, lake, Map("Agency_Data" -> cols))
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    LakeIngest.registerTable(spark, table, lake, "Agency_Data", cols)
+    def snapshot(d: String) = spark.table(table)
+      .where(col("importdate") === lit(d)).drop("importdate")
+    (snapshot("2024-01-15"), snapshot("2024-01-08"))
+  }
+
+  test("file-sourced plan pin: over a two-week lake written by " +
+       "LakeIngest, no execution of the narrow delta, the steering " +
+       "collect included, shuffles more than (key, hash) columns") {
+    val table = "abr_delta_pin_spec"
+    val weeks = AgencyWeeks.pair(8000)
+    val (n, p) = fileLake(table, weeks)
+    // the benchmark's threshold for its 8,000-row weeks: the snapshots'
+    // files are estimated past it, so no join is broadcast unasked
+    try withBroadcastThreshold(163840) {
+      val (counts, executions) = executionsOf {
+        val d = SnapshotDelta.deltas(n, p, AbrSchemas.agencyKey,
+          AbrSchemas.agencyCompareAttrs)
+        assert(d.narrow)
+        (d.updated.collect().length, d.added.collect().length)
+      }
+      assert(counts == (weeks.changed, weeks.added))
+      assert(executions.size >= 3, s"expected the steering collect and " +
+        s"both outputs, saw ${executions.size} executions")
+      val widths = executions.flatMap(qe => allNodes(qe.executedPlan))
+        .collect { case s: ShuffleExchangeLike => s.child.output.length }
+      assert(widths.forall(_ <= 3),
+        s"a wide row crossed a shuffle: exchange widths $widths")
+    } finally spark.sql(s"DROP TABLE IF EXISTS `$table`")
+  }
+
+  /** [[SnapshotDelta.deltas]] over (n, p), with its ADDED and the
+    * anti-join [[SnapshotDelta.added]] as row multisets.
+    */
+  private def addedBoth(n: DataFrame, p: DataFrame)
+      : (SnapshotDelta.Deltas, Seq[String], Seq[String]) = {
+    val d = SnapshotDelta.deltas(n, p, "pid", Seq("a", "b"))
+    (d, rows(d.added), rows(SnapshotDelta.added(n, p, "pid")))
+  }
+
+  test("narrow ADDED equals the anti-join with NULL keys in newest, in " +
+       "previous and in both: a NULL-key row of newest is added") {
+    val base = Seq(("p1", "x", "1"), ("p2", "x", "1"))
+    val nulls = Seq((null: String, "n", "1"), (null: String, "m", "2"))
+    for ((n, p, nullRows) <- Seq(
+        (snap(base ++ nulls: _*), snap(base: _*), 2),
+        (snap(base :+ (("p3", "x", "1")): _*), snap(base ++ nulls: _*), 0),
+        (snap(base ++ nulls: _*), snap(base ++ nulls.take(1): _*), 2))) {
+      val (d, narrow, plain) = addedBoth(n, p)
+      assert(d.narrow)
+      assert(narrow == plain)
+      assert(narrow.count(_.startsWith("[null,")) == nullRows, narrow)
+    }
+  }
+
+  test("narrow ADDED equals the anti-join under duplicate keys on " +
+       "either side, and a key is counted once") {
+    val p = snap(("d1", "x", "1"), ("d1", "y", "1"), ("d2", "x", "1"))
+    val n = snap(("d1", "x", "1"), ("d2", "q", "1"), ("d2", "q", "1"),
+      ("d3", "x", "1"), ("d3", "x", "1"), ("d3", "z", "2"))
+    val (d, narrow, plain) = addedBoth(n, p)
+    assert(d.narrow && d.changedKeys == 2 && d.addedKeys == 1)
+    assert(narrow == plain && narrow.size == 3)
+  }
+
+  test("an all-new week adds every newest row; a week with no new keys " +
+       "writes the header-only ADDED file the anti-join writes") {
+    val allNew = snap(("n1", "x", "1"), ("n2", "x", "1"), ("n2", "y", "1"))
+    val (d, narrow, plain) = addedBoth(allNew, prev)
+    assert(d.narrow && d.changedKeys == 0 && d.addedKeys == 2)
+    assert(narrow == plain && narrow.size == 3)
+    val noNew = snap(("p1", "x", "1"), ("p2", "z", "1"))
+    val (d2, narrow2, plain2) = addedBoth(noNew, prev)
+    assert(d2.narrow && d2.addedKeys == 0 && narrow2.isEmpty && plain2.isEmpty)
+    val dir = Files.createTempDirectory("graft-added").toString
+    def file(df: DataFrame, name: String): String = Files.readString(
+      Paths.get(new java.net.URI(SingleFileCsv.write(df, dir, name)).getPath))
+    assert(file(d2.added, "narrow.csv") == "pid,a,b\n")
+    assert(file(SnapshotDelta.added(noNew, prev, "pid"), "plain.csv") ==
+      "pid,a,b\n")
+  }
+
+  test("budget edges: changed + added keys = budget keeps the narrow " +
+       "plans, budget + 1 returns the plain ones; both outputs equal " +
+       "the plain plans' either way") {
+    // the steering hash is null-safe: p2, p3 and p4 changed, p6 added
+    for ((budget, narrow) <- Seq(4L -> true, 3L -> false))
+      withBroadcastThreshold(budget * 64) {
+        val (d, narrowAdded, plainAdded) = addedBoth(newer, prev)
+        assert(d.narrow == narrow, s"4 keys vs budget $budget")
+        assert(d.changedKeys == 3 && d.addedKeys == 1)
+        assert(narrowAdded == plainAdded && narrowAdded.size == 1)
+        Seq(Legacy, NullSafe).foreach { mode =>
+          assert(rows(SnapshotDelta.deltas(newer, prev, "pid",
+              Seq("a", "b"), mode).updated) ==
+            rows(SnapshotDelta.updated(newer, prev, "pid", Seq("a", "b"),
+              mode)), s"mode $mode at budget $budget")
+        }
       }
   }
 

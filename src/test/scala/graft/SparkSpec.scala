@@ -26,6 +26,19 @@ trait SparkSpec extends AnyFunSuite {
     p +: kids.flatMap(allNodes)
   }
 
+  /** `body` with `autoBroadcastJoinThreshold` set to `bytes`, so that
+    * the delta's steering budget is `bytes / 64` keys.
+    */
+  def withBroadcastThreshold[A](bytes: Long)(body: => A): A = {
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(k)
+    spark.conf.set(k, bytes.toString)
+    try body finally saved match {
+      case Some(v) => spark.conf.set(k, v)
+      case None    => spark.conf.unset(k)
+    }
+  }
+
   /** Every query execution `body` runs, in order, with its result.
     * Listener events arrive in order, so once a marker query is reported
     * every execution before it has been.
